@@ -27,7 +27,17 @@ from .operators.dedup import dedup_keep_any
 from .operators.merge import anti_join_merge, high_water_mark_filter
 
 
-from .qcommon import _fanout, _table, _utc, reuse, round6x  # noqa: F401  (re-exported)
+from .qcommon import (  # noqa: F401  (re-exported)
+    LSH_BANDS,
+    MINHASH_SEEDS,
+    _TOKS_SQL,
+    _fanout,
+    _minhash_sql,
+    _table,
+    _utc,
+    reuse,
+    round6x,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -935,9 +945,6 @@ FROM fb
 # family, similarity search, multimodal plumbing
 # ---------------------------------------------------------------------------
 
-_TOKS_SQL = r"regexp_split_to_array(lower(trim(text)), '\s+')"
-
-
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens + BPE-ish regex pieces, one scan."""
     _utc(spark)
@@ -1047,10 +1054,6 @@ GROUP BY 1
 """
 
 
-MINHASH_SEEDS = 12
-LSH_BANDS = 4
-
-
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH candidate pairs: shingle → 12 md5-minhashes → 4 band
     keys → bucket self-join (id_a < id_b)."""
@@ -1061,50 +1064,6 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(
         docs, num_hashes=MINHASH_SEEDS, num_bands=LSH_BANDS
     ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
-
-
-def _minhash_sql() -> str:
-    from .operators.fuzzy_dedup import MINHASH_PRIME, minhash_coeffs
-
-    a, b = minhash_coeffs(MINHASH_SEEDS)
-    mins = ",\n         ".join(
-        f"list_min(list_transform(xs, x -> ({a[s]} * x + {b[s]}) % {MINHASH_PRIME})) AS h{s}"
-        for s in range(MINHASH_SEEDS)
-    )
-    rows = MINHASH_SEEDS // LSH_BANDS
-    bands = "\n  UNION ALL\n".join(
-        "  SELECT doc_id, {b} AS band, md5({key}) AS band_key FROM mh".format(
-            b=b,
-            key=" || '|' || ".join(f"h{b * rows + r}::VARCHAR" for r in range(rows)),
-        )
-        for b in range(LSH_BANDS)
-    )
-    return rf"""
-WITH toks AS (
-  SELECT doc_id, {_TOKS_SQL} AS t FROM documents
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 3 THEN list_distinct(list_transform(
-             generate_series(1, len(t) - 2),
-             i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-              ELSE [] END AS sh
-  FROM toks
-), xs AS (
-  SELECT doc_id,
-         list_transform(sh, g ->
-             ('0x' || substring(md5(g), 1, 15))::BIGINT % {MINHASH_PRIME}) AS xs
-  FROM sh
-), mh AS (
-  SELECT doc_id,
-         {mins}
-  FROM xs
-), bands AS (
-{bands}
-)
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-FROM bands a JOIN bands b
-  ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-"""
 
 
 SQL_MINHASH_LSH = _minhash_sql()
@@ -2414,19 +2373,10 @@ ORACLE.update(ORACLE_STREAM)
 QUERIES.update(QUERIES_R6)
 ORACLE.update(ORACLE_R6)
 
-from .driver_queries_r7 import ORACLE_R7, QUERIES_R7, lsh_recall_sql  # noqa: E402
+from .driver_queries_r7 import ORACLE_R7, QUERIES_R7  # noqa: E402
 
 QUERIES.update(QUERIES_R7)
 ORACLE.update(ORACLE_R7)
-ORACLE["lsh_recall_audit"] = lsh_recall_sql(_minhash_sql())
-
-from .driver_queries_r7 import cluster_purity_sql  # noqa: E402
-
-ORACLE["cluster_purity"] = cluster_purity_sql(ORACLE_EXT["kmeans_clusters"])
-
-from .driver_queries_r6 import dedup_keep_list_sql  # noqa: E402
-
-ORACLE["dedup_keep_list"] = dedup_keep_list_sql(_minhash_sql())
 
 # Gate-window rotation: the driver verifies exactly the FIRST 50 entries
 # of queries() each round. Rotation policy (formalized round 6, VERDICT

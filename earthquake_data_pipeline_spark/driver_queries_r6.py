@@ -20,7 +20,14 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .qcommon import _fanout, _table, _utc
+from .qcommon import (
+    LSH_BANDS,
+    MINHASH_SEEDS,
+    _fanout,
+    _minhash_sql,
+    _table,
+    _utc,
+)
 
 
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1460,7 +1467,6 @@ def q_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the graph dedup-shaped.)
     """
     _utc(spark)
-    from .driver_queries import LSH_BANDS, MINHASH_SEEDS
     from .operators.curation import dedup_keep_list
     from .operators.fuzzy_dedup import minhash_lsh_pairs
 
@@ -1476,14 +1482,9 @@ def q_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_keep_list(docs, pairs)
 
 
-def dedup_keep_list_sql(minhash_sql: str) -> str:
-    """Oracle for dedup_keep_list, parameterized on the MinHash pair
-    CTE (defined in driver_queries, which imports this module — passing
-    the fragment in avoids a circular module-level import that would
-    truncate the registries under r6-first import order)."""
-    return rf"""
+SQL_DEDUP_KEEP_LIST = rf"""
 WITH RECURSIVE pairs AS (
-{minhash_sql}
+{_minhash_sql()}
 ), edges AS (
   SELECT doc_a AS a, doc_b AS b FROM pairs
   UNION ALL
@@ -1511,7 +1512,7 @@ FROM ranked ORDER BY doc_id
 """
 
 QUERIES_R6["dedup_keep_list"] = q_dedup_keep_list
-# oracle registered by driver_queries after merge (needs _minhash_sql)
+ORACLE_R6["dedup_keep_list"] = SQL_DEDUP_KEEP_LIST
 
 
 def q_event_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:

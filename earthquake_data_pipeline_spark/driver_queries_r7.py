@@ -17,7 +17,16 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .qcommon import _fanout, _table, _utc, epoch_s, reuse, round6x
+from .driver_queries_ext import SQL_KMEANS_CLUSTERS
+from .qcommon import (
+    _fanout,
+    _minhash_sql,
+    _table,
+    _utc,
+    epoch_s,
+    reuse,
+    round6x,
+)
 
 QUERIES_R7: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_R7: dict[str, str] = {}
@@ -1092,14 +1101,12 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def lsh_recall_sql(minhash_sql: str) -> str:
-    """Oracle for lsh_recall_audit, parameterized on the MinHash pair
-    fragment (same import-order reason as dedup_keep_list_sql). The
-    exact side is the brute-force all-pairs shingle join — a hash match
-    proves the Spark prefix-filter ground truth loses nothing."""
-    return rf"""
+# Oracle for lsh_recall_audit: the MinHash pair replay plus a
+# brute-force all-pairs shingle join as the exact side — a hash match
+# proves the Spark prefix-filter ground truth loses nothing.
+SQL_LSH_RECALL_AUDIT = rf"""
 WITH lshp AS (
-{minhash_sql}
+{_minhash_sql()}
 ), toks2 AS (
   SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
   FROM documents
@@ -1180,6 +1187,7 @@ ORACLE_R7["k_anonymity"] = SQL_K_ANONYMITY
 QUERIES_R7["boolean_search"] = q_boolean_search
 ORACLE_R7["boolean_search"] = SQL_BOOLEAN_SEARCH
 QUERIES_R7["lsh_recall_audit"] = q_lsh_recall_audit
+ORACLE_R7["lsh_recall_audit"] = SQL_LSH_RECALL_AUDIT
 
 
 def q_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1504,14 +1512,12 @@ def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cluster_purity_sql(kmeans_sql: str) -> str:
-    """Oracle for cluster_purity: reuse SQL_KMEANS_CLUSTERS' replay up
-    to its final-assignment CTE (a2) and aggregate label purity on top
-    — one source of truth for the Lloyd-iteration replay."""
-    prefix = kmeans_sql.split(")\nSELECT cluster_id,")[0] + ")"
-    return (
-        prefix
-        + """
+# Oracle for cluster_purity: reuse SQL_KMEANS_CLUSTERS' replay up to
+# its final-assignment CTE (a2) and aggregate label purity on top — one
+# source of truth for the Lloyd-iteration replay.
+SQL_CLUSTER_PURITY = (
+    SQL_KMEANS_CLUSTERS.split(")\nSELECT cluster_id,")[0] + ")"
+    + """
 , lab AS (
   SELECT a2.cluster_id, emb.label
   FROM a2 JOIN embeddings emb ON emb.vec_id = a2.id
@@ -1537,10 +1543,11 @@ SELECT s.cluster_id, s.n_points, s.n_labels,
 FROM stats s JOIN ranked r ON r.cluster_id = s.cluster_id AND r.rn = 1
 ORDER BY s.cluster_id
 """
-    )
+)
 
 
 QUERIES_R7["cluster_purity"] = q_cluster_purity
+ORACLE_R7["cluster_purity"] = SQL_CLUSTER_PURITY
 
 
 def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:

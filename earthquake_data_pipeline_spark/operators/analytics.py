@@ -1459,7 +1459,7 @@ def percentile_moments_by_counts(
     - output adds ``sd`` = stddev_samp(value), computed by the
       numerically-stable two-pass form WITHOUT a second data pass: the
       per-key mean rides the same full-frame window as ``n`` (exact
-      decimal(38,6) sum of count·value, one cast to double), and the
+      decimal(38,12) sum of count·value, one cast to double), and the
       final per-key aggregate sums c·(v−mean)² in double. A constant-
       valued key yields exactly 0 (mean equals v bit-for-bit while
       n·v is representable), a 1-row key NULL — matching stddev_samp.
@@ -1478,10 +1478,14 @@ def percentile_moments_by_counts(
     nn = F.when(F.col("v").isNotNull(), F.col("c")).otherwise(F.lit(0))
     # decimal(19,0)·decimal(18,12) → decimal(38,12) EXACT (no precision
     # cap hit), sum stays (38,12): exact while |v| < 1e6 and
-    # Σ|c·v| < 1e26 (bounded-domain envelope; an overflow surfaces as
-    # NULL sd, never a silently-wrong digit). The 12-dp cast bounds the
-    # mean's error at ≤5e-13 absolute, so the two-pass M2 bias n·δ² is
-    # ~1e-25·n — invisible at the 6-dp rounding every consumer applies.
+    # Σ|c·v| < 1e26 (bounded-domain envelope). Outside it the result
+    # depends on ANSI: with ANSI on, the decimal(18,12) cast of
+    # |v| ≥ 1e6 raises NUMERIC_VALUE_OUT_OF_RANGE (loud); with ANSI off
+    # the cast yields NULL, F.sum skips that addend and the mean — hence
+    # sd — is silently wrong (tests/test_scale.py pins the ANSI raise).
+    # The 12-dp cast bounds the mean's error at ≤5e-13 absolute, so the
+    # two-pass M2 bias n·δ² is ~1e-25·n — invisible at the 6-dp
+    # rounding every consumer applies.
     cv = F.col("c").cast("decimal(19,0)") * F.when(
         F.col("v").isNotNull(), F.col("v")
     ).otherwise(F.lit(0.0)).cast("decimal(18,12)")

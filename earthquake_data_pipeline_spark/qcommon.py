@@ -41,8 +41,7 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 # files, so every bench/oracle invocation computes from the inputs.
 # Keyed on (applicationId, path, mtime_ns, size): a new SparkContext or
 # a rewritten file gets a fresh read (the adversarial-axis tools that
-# mutate mirror dirs mid-process stay correct). ``SPARK_GRAFT_TABLE_MEMO=off``
-# disables it.
+# mutate mirror dirs mid-process stay correct).
 _TABLE_MEMO: dict[str, dict[tuple, DataFrame]] = {}
 
 
@@ -52,9 +51,6 @@ def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # The NTZ→timestamp cast in normalize_events_ts reads the session
         # tz at plan time; pin UTC first so the instant is timezone-proof.
         _utc(spark)
-    if os.environ.get("SPARK_GRAFT_TABLE_MEMO", "on") == "off":
-        df = spark.read.parquet(path)
-        return normalize_events_ts(df) if name == "events" else df
     app = spark.sparkContext.applicationId
     per_app = _TABLE_MEMO.get(app)
     if per_app is None:
@@ -93,8 +89,6 @@ def _table_schema(spark: SparkSession, sf_dir: str, name: str):
     stream-side ``normalize_events_ts`` applies the identical cast.
     """
     path = f"{sf_dir}/{name}.parquet"
-    if os.environ.get("SPARK_GRAFT_TABLE_MEMO", "on") == "off":
-        return spark.read.parquet(path).schema
     try:
         st = os.stat(path)
         key = (path, st.st_mtime_ns, st.st_size)
@@ -336,3 +330,58 @@ def round6u(col):
     The DuckDB twin is: floor(x*1e6 + 0.5)/1e6.
     """
     return F.floor(col * F.lit(1e6) + F.lit(0.5)).cast("double") / F.lit(1e6)
+
+
+# ---------------------------------------------------------------------------
+# Shared DuckDB oracle fragments: the MinHash-LSH pair replay is nested
+# inside several oracles across the catalog modules, so it lives here.
+# ---------------------------------------------------------------------------
+
+_TOKS_SQL = r"regexp_split_to_array(lower(trim(text)), '\s+')"
+
+MINHASH_SEEDS = 12
+LSH_BANDS = 4
+
+
+def _minhash_sql() -> str:
+    from .operators.fuzzy_dedup import MINHASH_PRIME, minhash_coeffs
+
+    a, b = minhash_coeffs(MINHASH_SEEDS)
+    mins = ",\n         ".join(
+        f"list_min(list_transform(xs, x -> ({a[s]} * x + {b[s]}) % {MINHASH_PRIME})) AS h{s}"
+        for s in range(MINHASH_SEEDS)
+    )
+    rows = MINHASH_SEEDS // LSH_BANDS
+    bands = "\n  UNION ALL\n".join(
+        "  SELECT doc_id, {b} AS band, md5({key}) AS band_key FROM mh".format(
+            b=b,
+            key=" || '|' || ".join(f"h{b * rows + r}::VARCHAR" for r in range(rows)),
+        )
+        for b in range(LSH_BANDS)
+    )
+    return rf"""
+WITH toks AS (
+  SELECT doc_id, {_TOKS_SQL} AS t FROM documents
+), sh AS (
+  SELECT doc_id,
+         CASE WHEN len(t) >= 3 THEN list_distinct(list_transform(
+             generate_series(1, len(t) - 2),
+             i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
+              ELSE [] END AS sh
+  FROM toks
+), xs AS (
+  SELECT doc_id,
+         list_transform(sh, g ->
+             ('0x' || substring(md5(g), 1, 15))::BIGINT % {MINHASH_PRIME}) AS xs
+  FROM sh
+), mh AS (
+  SELECT doc_id,
+         {mins}
+  FROM xs
+), bands AS (
+{bands}
+)
+SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+FROM bands a JOIN bands b
+  ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
+"""

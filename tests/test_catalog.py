@@ -4,19 +4,17 @@ produces a stable, explicitly-named schema — guards future additions."""
 from __future__ import annotations
 
 import re
+from pathlib import Path
 
 import __spark_entry__ as entry
 
-# approximate/recall<1 ops that legitimately have no SQL oracle
-ROWS_ONLY = {"ann_lsh", "ann_ivf", "usgs_pipeline", "approx_stats"}
 
-
-def test_every_query_has_oracle_or_is_known_rows_only():
+def test_every_query_has_an_oracle():
     qs, oracles = entry.queries(), entry.oracle_sql()
-    missing = set(qs) - set(oracles) - ROWS_ONLY
-    assert not missing, f"queries without oracle nor rows-only waiver: {missing}"
-    stale = set(oracles) - set(qs)
-    assert not stale, f"oracles without queries: {stale}"
+    assert set(qs) == set(oracles), (
+        f"queries without oracle: {set(qs) - set(oracles)}; "
+        f"oracles without queries: {set(oracles) - set(qs)}"
+    )
 
 
 def test_schemas_are_explicitly_named(spark):
@@ -45,7 +43,7 @@ def test_gate_head_invariants():
     unknown = [n for n in _GATE_FIRST if n not in qs]
     assert not unknown, f"_GATE_FIRST names not in queries(): {unknown}"
     assert list(qs)[:50] == _GATE_FIRST
-    no_oracle = [n for n in _GATE_FIRST if n not in oracles and n not in ROWS_ONLY]
+    no_oracle = [n for n in _GATE_FIRST if n not in oracles]
     assert not no_oracle, f"head entries without oracle: {no_oracle}"
 
 
@@ -56,7 +54,7 @@ def test_proof_debt_accounting_matches_artifacts():
     (the round-6 invariant: nothing ships outside the proven window)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
     from check import GATE_WINDOW, driver_proven
 
     proven = driver_proven()

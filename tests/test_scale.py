@@ -261,6 +261,27 @@ def test_percentile_moments_by_counts_matches_row_form(spark):
     assert got["const"][2] == 0.0  # exactly zero, not 1e-13
 
 
+def test_percentile_moments_by_counts_out_of_envelope_raises_under_ansi(spark):
+    """The sd accumulates in decimal(18,12), so |v| >= 1e6 is outside the
+    operator's envelope. Under ANSI the cast must fail loud
+    (NUMERIC_VALUE_OUT_OF_RANGE); with ANSI off it would yield NULL and
+    F.sum would skip the addend, giving a silently wrong sd."""
+    from earthquake_data_pipeline_spark.operators.analytics import (
+        percentile_moments_by_counts,
+    )
+
+    df = spark.createDataFrame(
+        [("k", 1.0), ("k", 2e6), ("k", 3.0)], "k string, v double"
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+            percentile_moments_by_counts(df, "k", "v", [0.5]).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
 def test_percentile_by_counts_plan_has_no_row_level_sort_buffer(spark):
     """The point of the histogram form: the only per-key window runs
     over DISTINCT VALUES (post-aggregation), and no sort-based

@@ -31,13 +31,8 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from check import TABLES, normalize, value_repr  # noqa: E402
+from check import oracle, outcome
 
 KNOWN_FLAVOR_DIVERGENCES: dict[str, str] = {}
 
@@ -57,10 +52,12 @@ def _count_checkpoints(ckpt_dir: str) -> int:
     return n
 
 
-def run_flavor(flavor: str, sf_dir: str, only: set[str]) -> tuple[int, int, list[str]]:
-    import duckdb
-
+def run_flavor(flavor: str, sf_dir: str, names: list[str]) -> list[str]:
+    """Sweep ``names`` (default: the catalog) in one reuse() flavor; its
+    per-query hook replays the flavor's contract (``clearCache`` for
+    persist, checkpoint-dir sampling for reliable). Returns findings."""
     os.environ["SPARK_GRAFT_REUSE"] = flavor
+    from earthquake_data_pipeline_spark.driver_queries import QUERIES
     from earthquake_data_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name=f"edps-reuse-{flavor}", cpus=8,
@@ -69,82 +66,50 @@ def run_flavor(flavor: str, sf_dir: str, only: set[str]) -> tuple[int, int, list
     if flavor == "reliable":
         ckpt_dir = tempfile.mkdtemp(prefix="edps-ckpt-")
         spark.sparkContext.setCheckpointDir(ckpt_dir)
-
-    import __spark_entry__ as m
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    queries, oracles = m.queries(), m.oracle_sql()
-    n_pass = n_fail = 0
+    con = oracle(sf_dir)
     max_ckpt = 0  # sampled per query: end-of-sweep count is 0 whenever
     # ContextCleaner GC'd every checkpoint RDD during a slow sweep
     # (observed r15 on a ghost-contended host — 148/148 pass, real
     # rdd-* dirs written, 0 left at the end)
-    failures: list[str] = []
-    for name, fn in queries.items():
-        if only and name not in only:
-            continue
-        t0 = time.time()
-        try:
-            got = normalize(fn(spark, sf_dir).toPandas())
-            if name in oracles:
-                want = normalize(con.execute(oracles[name]).fetchdf())
-                ok = len(got) == len(want) and value_repr(got) == value_repr(want)
-            else:
-                ok = True  # rows-only streaming checks
-        except Exception as e:  # noqa: BLE001
-            ok = False
-            print(f"  ERROR {name}: {type(e).__name__}: {str(e)[:200]}")
-        dt = time.time() - t0
-        if ok:
-            n_pass += 1
+    n_ok, findings = 0, []
+    for name in names or QUERIES:
+        kind, detail = outcome(spark, con, name, sf_dir)
+        want = KNOWN_FLAVOR_DIVERGENCES.get(name, "match")
+        if kind == want:
+            n_ok += 1
+            print(f"ok   {name}: {kind}", flush=True)
         else:
-            n_fail += 1
-            failures.append(name)
-            if name in KNOWN_FLAVOR_DIVERGENCES:
-                print(f"  KNOWN {name}: {KNOWN_FLAVOR_DIVERGENCES[name]}")
-            else:
-                print(f"  FAIL  {name} ({dt:.1f}s)")
+            findings.append(f"{name}: expected {want}, got {kind}: {detail}")
+            print(f"FAIL {findings[-1]}", flush=True)
         if flavor == "persist":
             # the documented long-lived-driver contract: drop cache
             # entries between jobs so the CacheManager never grows
             spark.catalog.clearCache()
         elif ckpt_dir is not None:
             max_ckpt = max(max_ckpt, _count_checkpoints(ckpt_dir))
-    if flavor == "reliable":
+    if ckpt_dir is not None:
         n_ckpt = max(max_ckpt, _count_checkpoints(ckpt_dir))
         print(f"  checkpoint dirs materialized (max sampled): {n_ckpt}")
-        if n_ckpt == 0 and not only:
+        if n_ckpt == 0 and not names:
             # a full sweep that wrote no checkpoint files silently
             # exercised some other flavor — the axis proved nothing
-            failures.append("__no_checkpoints_written__")
-            n_fail += 1
+            findings.append("__no_checkpoints_written__")
+        shutil.rmtree(ckpt_dir, ignore_errors=True)
     spark.stop()
     con.close()
-    if ckpt_dir:
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
     os.environ.pop("SPARK_GRAFT_REUSE", None)
-    return n_pass, n_fail, failures
+    print(f"{flavor}: {n_ok} pass / {len(findings)} fail", *findings, sep="\n")
+    return findings
 
 
 def main() -> int:
     args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
-    total_fail = 0
+    failures = []
     for flavor in FLAVORS:
         print(f"== SPARK_GRAFT_REUSE={flavor} ==")
-        n_pass, n_fail, failures = run_flavor(flavor, sf_dir, only)
-        print(f"{flavor}: {n_pass} pass / {n_fail} fail"
-              + (f" ({', '.join(failures)})" if failures else ""))
-        total_fail += sum(
-            1 for f in failures if f not in KNOWN_FLAVOR_DIVERGENCES
-        )
-    return 1 if total_fail else 0
+        failures += run_flavor(flavor, sf_dir, args[1:])
+    return 1 if failures else 0
 
 
 if __name__ == "__main__":

@@ -19,8 +19,10 @@ contained PER FILE:
   readable — lineitem queries succeed, proving the blast radius is
   the corrupted file, not the directory.
 
-Outcome classes: every events-reading probe must raise (``loud``), the
-control must ``match`` its oracle. Expectation table EMPTY by design.
+Outcome classes (tools/check.py's, against the DuckDB oracle on the
+pristine source tables): every events-reading probe must raise
+(``spark_error``), the control must ``match``. Expectation table EMPTY
+by design.
 
 Usage: python tools/corrupt_input_check.py
 """
@@ -29,13 +31,8 @@ from __future__ import annotations
 
 import os
 import shutil
-import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from check import TABLES, normalize, value_repr  # noqa: E402
+from check import TABLES, oracle, sweep
 
 _SRC = "/root/testdata/sf0.001"
 _MIRROR = "/tmp/edps-corrupt-sf"
@@ -79,63 +76,23 @@ def make_mirror(mode: str) -> str:
 
 
 def main() -> int:
-    import duckdb
-
-    import __spark_entry__ as m
     from earthquake_data_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="edps-corrupt-sweep", cpus=8,
                       shuffle_partitions=8)
-    queries, oracles = m.queries(), m.oracle_sql()
-    findings: list[str] = []
-    n_pass = n_total = 0
+    # the oracle reads the pristine tables: a corrupted events file must
+    # make Spark fail loud, and every other table must still match
+    con = oracle(_SRC)
+    expected = {p: "spark_error" for p in EVENTS_PROBES}
+    expected.update(KNOWN_CORRUPT_BEHAVIOR)
+    n_ok, findings = 0, []
     for mode in ("truncated", "bitflip"):
-        sf_dir = make_mirror(mode)
         print(f"== {mode} events.parquet ==")
-        for name in EVENTS_PROBES:
-            n_total += 1
-            try:
-                got = queries[name](spark, sf_dir).toPandas()
-                outcome = f"SILENT ({len(got)} rows returned)"
-            except Exception as e:  # noqa: BLE001
-                outcome = f"loud ({type(e).__name__})"
-            expected = KNOWN_CORRUPT_BEHAVIOR.get(name, "loud")
-            if outcome.startswith(expected):
-                n_pass += 1
-                print(f"ok   {name}: {outcome}")
-            else:
-                findings.append(f"{mode}/{name}: expected {expected}, got {outcome}")
-                print(f"BAD  {name}: {outcome}")
-        # control: corruption is contained to the corrupted FILE
-        con = duckdb.connect()
-        for t in TABLES:
-            if t == "events":
-                continue  # DuckDB would also refuse the corrupt file
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/{t}.parquet')"
-            )
-        for name in CONTROL_PROBES:
-            n_total += 1
-            try:
-                got = normalize(queries[name](spark, sf_dir).toPandas())
-                want = normalize(con.execute(oracles[name]).fetchdf())
-                ok = len(got) == len(want) and value_repr(got) == value_repr(want)
-                outcome = "match" if ok else "divergence"
-            except Exception as e:  # noqa: BLE001
-                outcome = f"loud ({type(e).__name__})"
-            if outcome == "match":
-                n_pass += 1
-                print(f"ok   {name}: control intact")
-            else:
-                findings.append(f"{mode}/{name}: control expected match, got {outcome}")
-                print(f"BAD  {name}: {outcome}")
-        con.close()
-    print(f"\n{n_pass}/{n_total} as documented")
-    if findings:
-        print("\n".join(findings))
-        return 1
-    return 0
+        n, f = sweep(spark, con, make_mirror(mode), EVENTS_PROBES + CONTROL_PROBES,
+                     expected=expected)
+        n_ok, findings = n_ok + n, findings + [f"{mode}/{x}" for x in f]
+    print(f"\n{n_ok}/{n_ok + len(findings)} as documented", *findings, sep="\n")
+    return 1 if findings else 0
 
 
 if __name__ == "__main__":

@@ -25,12 +25,8 @@ query. Run: ``python tools/empty_check.py``.
 from __future__ import annotations
 
 import os
-import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from check import TABLES, normalize, value_repr  # noqa: E402
+from check import TABLES, oracle, sweep
 
 _EMPTY_DIR = "/tmp/edps-empty-sf"
 _SCHEMA_SRC = "/root/testdata/sf0.001"
@@ -64,47 +60,13 @@ def make_empty_mirror() -> str:
 
 
 def main() -> int:
-    import duckdb
-
-    import __spark_entry__ as m
     from earthquake_data_pipeline_spark.session import get_spark
 
     sf_dir = make_empty_mirror()
     spark = get_spark(app_name="edps-empty-check", cpus=8, shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
-    queries, oracles = m.queries(), m.oracle_sql()
-    drift: list[str] = []
-    n_pass = 0
-    for name, fn in queries.items():
-        if name not in oracles:
-            continue  # rows-only streaming checks: out of axis scope
-        expected = KNOWN_EMPTY_DIVERGENCES.get(name)
-        outcome = "match"
-        try:
-            got = normalize(fn(spark, sf_dir).toPandas())
-            want = normalize(con.execute(oracles[name]).fetchdf())
-            if len(got) != len(want) or value_repr(got) != value_repr(want):
-                outcome = "divergence"
-        except Exception:
-            outcome = "spark_error"
-        if expected is None and outcome != "match":
-            drift.append(f"{name}: NEW empty-input {outcome}")
-        elif expected is not None and outcome != expected:
-            drift.append(
-                f"{name}: expected {expected}, got {outcome} — "
-                "operator changed, re-audit and update the table"
-            )
-        else:
-            n_pass += 1
-        print(f"{'ok' if not drift or drift[-1].split(':')[0] != name else 'DRIFT'}"
-              f" {name}: {outcome}")
-    print(f"\n{n_pass}/{len([q for q in queries if q in oracles])} as documented")
+    n_ok, drift = sweep(spark, oracle(sf_dir), sf_dir,
+                        expected=KNOWN_EMPTY_DIVERGENCES)
+    print(f"\n{n_ok}/{n_ok + len(drift)} as documented")
     for d in drift:
         print("DRIFT:", d)
     return 1 if drift else 0

@@ -26,88 +26,30 @@ Usage: python tools/executor_count_check.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
-import os
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from check import TABLES, normalize, value_repr  # noqa: E402
+from check import oracle, sweep
+from multijvm_check import cluster_session
 
 KNOWN_TOPOLOGY_DIVERGENCES: dict[str, str] = {}
 
 TOPOLOGIES = ["local-cluster[1,8,4096]", "local-cluster[8,1,1024]"]
 
 
-def run_topology(master: str, sf_dir: str, only: set[str]) -> tuple[int, int, list[str]]:
-    import duckdb
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(master)
-        .appName("edps-executor-count-check")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.executorEnv.PYTHONPATH", REPO)
-        .getOrCreate()
-    )
-    import __spark_entry__ as m
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    queries, oracles = m.queries(), m.oracle_sql()
-    n_pass = n_fail = 0
-    failures: list[str] = []
-    for name, fn in queries.items():
-        if only and name not in only:
-            continue
-        t0 = time.time()
-        try:
-            got = normalize(fn(spark, sf_dir).toPandas())
-            if name in oracles:
-                want = normalize(con.execute(oracles[name]).fetchdf())
-                ok = len(got) == len(want) and value_repr(got) == value_repr(want)
-            else:
-                ok = True  # rows-only streaming checks
-        except Exception as e:  # noqa: BLE001
-            ok = False
-            print(f"  ERROR {name}: {type(e).__name__}: {str(e)[:200]}")
-        dt = time.time() - t0
-        if ok:
-            n_pass += 1
-        else:
-            n_fail += 1
-            failures.append(name)
-            if name in KNOWN_TOPOLOGY_DIVERGENCES:
-                print(f"  KNOWN {name}: {KNOWN_TOPOLOGY_DIVERGENCES[name]}")
-            else:
-                print(f"  FAIL  {name} ({dt:.1f}s)")
-    spark.stop()
-    con.close()
-    return n_pass, n_fail, failures
-
-
 def main() -> int:
     args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
+    con = oracle(sf_dir)
     total_fail = 0
     for master in TOPOLOGIES:
         print(f"== {master} ==")
-        n_pass, n_fail, failures = run_topology(master, sf_dir, only)
-        print(f"{master}: {n_pass} pass / {n_fail} fail"
-              + (f" ({', '.join(failures)})" if failures else ""))
-        total_fail += sum(
-            1 for f in failures if f not in KNOWN_TOPOLOGY_DIVERGENCES
-        )
+        spark = cluster_session(master, "edps-executor-count-check")
+        n_ok, failures = sweep(spark, con, sf_dir, args[1:],
+                               expected=KNOWN_TOPOLOGY_DIVERGENCES)
+        spark.stop()
+        print(f"{master}: {n_ok} pass / {len(failures)} fail", *failures,
+              sep="\n")
+        total_fail += len(failures)
     return 1 if total_fail else 0
 
 

@@ -16,7 +16,7 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Plan-only tooling escape hatch (ADVICE r15): the *_adaptive catalog
 # entries run a sampled skew probe (a Spark ACTION) at plan-construction

@@ -37,9 +37,7 @@ from __future__ import annotations
 
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-from check import TABLES, normalize, value_repr  # noqa: E402  (same dir)
+from check import oracle, sweep
 
 
 def main() -> int:
@@ -52,7 +50,6 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     tz = args[1] if len(args) > 1 else "America/New_York"
 
-    import duckdb
     from pyspark.sql import SparkSession
 
     # vanilla session: no engine configs beyond master + the hostile TZ
@@ -72,42 +69,17 @@ def main() -> int:
     if aqe_off:
         builder = builder.config("spark.sql.adaptive.enabled", "false")
     spark = builder.getOrCreate()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle(sf_dir)
 
-    import __spark_entry__ as entrymod
-
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     # --aqe-off sweeps the catalog once per shuffle-partition extreme
     # (runtime conf — applies to every job the query triggers)
-    partition_axes = ["1", "512"] if aqe_off else [None]
-    failures = []
-    for parts in partition_axes:
+    n_ok, failures = 0, []
+    for parts in ["1", "512"] if aqe_off else [None]:
         if parts is not None:
             spark.conf.set("spark.sql.shuffle.partitions", parts)
             print(f"--- shuffle.partitions={parts}, AQE off ---")
-        for name, fn in qs.items():
-            if name not in oracles:
-                continue
-            tag = name if parts is None else f"{name}@p{parts}"
-            try:
-                s = normalize(fn(spark, sf_dir).toPandas())
-                d = normalize(con.execute(oracles[name]).df())
-            except Exception as e:  # noqa: BLE001
-                print(f"FAIL {tag}: {e}")
-                failures.append(tag)
-                continue
-            if len(s) != len(d) or list(s.columns) != list(d.columns):
-                print(f"FAIL {tag}: shape {s.shape} vs {d.shape}")
-                failures.append(tag)
-            elif value_repr(s) != value_repr(d):
-                print(f"FAIL {tag}: value mismatch")
-                failures.append(tag)
-            else:
-                print(f"PASS {tag}")
+        n, f = sweep(spark, con, sf_dir, tag="" if parts is None else f"@p{parts}")
+        n_ok, failures = n_ok + n, failures + f
     label = (
         tz
         + ("+weird-confs" if weird else "")
@@ -115,8 +87,7 @@ def main() -> int:
         + ("+no-codegen" if no_codegen else "")
         + ("+aqe-off-p1-p512" if aqe_off else "")
     )
-    n_total = len([n for n in qs if n in oracles]) * len(partition_axes)
-    print(f"\nhostile[{label}]: {n_total - len(failures)} ok, {len(failures)} failed")
+    print(f"\nhostile[{label}]: {n_ok} ok, {len(failures)} failed")
     return 1 if failures else 0
 
 

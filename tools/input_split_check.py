@@ -27,12 +27,8 @@ Usage: python tools/input_split_check.py
 from __future__ import annotations
 
 import os
-import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from check import TABLES, normalize, value_repr  # noqa: E402
+from check import TABLES, oracle, sweep
 
 _MIRROR = "/tmp/edps-splits-sf"
 _SRC = "/root/testdata/sf0.001"
@@ -60,66 +56,21 @@ def make_mirror() -> str:
 
 
 def main() -> int:
-    import duckdb
-
-    import __spark_entry__ as m
     from earthquake_data_pipeline_spark.session import get_spark
 
     sf_dir = make_mirror()
     spark = get_spark(app_name="edps-split-sweep", cpus=8,
                       shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    queries, oracles = m.queries(), m.oracle_sql()
-    findings: list[str] = []
-    n_pass = n_total = 0
+    con = oracle(sf_dir)
+    n_ok, findings = 0, []
     for label, confs in SETTINGS:
         for key, val in confs.items():
             spark.conf.set(key, val)
-        for name, fn in queries.items():
-            if name not in oracles:
-                continue
-            n_total += 1
-            expected = KNOWN_SPLIT_DIVERGENCES.get(f"{name}@{label}")
-            outcome = "match"
-            err = ""
-            try:
-                got = normalize(fn(spark, sf_dir).toPandas())
-                want = normalize(con.execute(oracles[name]).fetchdf())
-                if len(got) != len(want) or value_repr(got) != value_repr(
-                    want
-                ):
-                    outcome = "divergence"
-            except Exception as e:  # noqa: BLE001
-                outcome = "spark_error"
-                err = f" [{type(e).__name__}: {str(e)[:120]}]"
-            if expected is None and outcome != "match":
-                findings.append(
-                    f"{name}@{label}: NEW input-split {outcome}{err}"
-                )
-            elif expected is not None and outcome != expected:
-                findings.append(
-                    f"{name}@{label}: expected {expected}, got "
-                    f"{outcome}{err}"
-                )
-            else:
-                n_pass += 1
-            tag = (
-                "ok"
-                if not findings
-                or not findings[-1].startswith(f"{name}@{label}:")
-                else "SPLIT"
-            )
-            print(f"{tag} {name}@{label}: {outcome}{err}", flush=True)
-    print(f"\n{n_pass}/{n_total} as documented")
-    if findings:
-        print("\n".join(findings))
-        return 1
-    return 0
+        n, f = sweep(spark, con, sf_dir, expected=KNOWN_SPLIT_DIVERGENCES,
+                     tag=f"@{label}")
+        n_ok, findings = n_ok + n, findings + f
+    print(f"\n{n_ok}/{n_ok + len(findings)} as documented", *findings, sep="\n")
+    return 1 if findings else 0
 
 
 if __name__ == "__main__":

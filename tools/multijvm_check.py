@@ -24,29 +24,29 @@ Usage: python tools/multijvm_check.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
-import os
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from check import TABLES, normalize, value_repr  # noqa: E402
+from check import REPO, oracle, sweep
 
 
 def main() -> int:
-    import time
-
-    import duckdb
-    from pyspark.sql import SparkSession
-
     args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
+    spark = cluster_session("local-cluster[2,4,2048]", "edps-multijvm-check")
+    n_ok, failures = sweep(spark, oracle(sf_dir), sf_dir, args[1:])
+    print(f"\n{n_ok} passed, {len(failures)} failed")
+    spark.stop()
+    return 1 if failures else 0
 
-    spark = (
-        SparkSession.builder.master("local-cluster[2,4,2048]")
-        .appName("edps-multijvm-check")
+
+def cluster_session(master: str, app_name: str):
+    """A vanilla session on a ``local-cluster`` master: real executor
+    JVMs, each importing the package from this checkout."""
+    from pyspark.sql import SparkSession
+
+    return (
+        SparkSession.builder.master(master)
+        .appName(app_name)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "true")
@@ -56,38 +56,6 @@ def main() -> int:
         .config("spark.executorEnv.PYTHONPATH", REPO)
         .getOrCreate()
     )
-
-    import __spark_entry__ as m
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    queries, oracles = m.queries(), m.oracle_sql()
-    n_pass = n_fail = 0
-    for name, fn in queries.items():
-        if only and name not in only:
-            continue
-        t0 = time.time()
-        try:
-            got = normalize(fn(spark, sf_dir).toPandas())
-            if name in oracles:
-                want = normalize(con.execute(oracles[name]).fetchdf())
-                ok = len(got) == len(want) and value_repr(got) == value_repr(want)
-            else:
-                ok = True  # rows-only streaming checks
-            status = "PASS" if ok else "DIVERGE"
-        except Exception as e:  # noqa: BLE001 - sweep records all
-            status, got = f"FAIL[{type(e).__name__}]", None
-            ok = False
-        n_pass += ok
-        n_fail += not ok
-        print(f"{status} {name} ({time.time()-t0:.1f}s)", flush=True)
-    print(f"\n{n_pass} passed, {n_fail} failed")
-    spark.stop()
-    return 1 if n_fail else 0
 
 
 if __name__ == "__main__":

@@ -17,8 +17,9 @@ catalog query against a NaN-bearing mirror of sf0.001 into:
                    NaN must be filtered at ingest for these queries,
                    and the error says so — this is documented-safe);
 - a FINDING      — anything asymmetric: Spark errors where DuckDB
-                   answers, DuckDB errors where Spark answers, or both
-                   answer and the values differ (the silent-wrong
+                   answers (``spark_error``), DuckDB errors where Spark
+                   answers (``oracle_error``), or both answer and the
+                   values differ (``divergence``, the silent-wrong
                    class this axis exists to catch).
 
 Mirror mutations (deterministic, no RNG):
@@ -38,7 +39,8 @@ Mirror mutations (deterministic, no RNG):
 
 Expectation table: ``KNOWN_NAN_BEHAVIOR`` maps ``query`` →
 ``loud_both`` (with the reason documented inline). Anything not
-matching its entry (or missing one) is a finding.
+matching its entry (or ``match`` when it has none) is a finding —
+including an entry that now matches (stale).
 
 Usage: python tools/nan_mirror_check.py [query ...]
 """
@@ -49,21 +51,17 @@ import math
 import os
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from check import TABLES, normalize, value_repr  # noqa: E402
+from check import TABLES, oracle, sweep
 
 _MIRROR = "/tmp/edps-nan-sf"
 _SRC = "/root/testdata/sf0.001"
 
 # query -> expected non-match outcome, filled by the r13 triage.
-# Matching is by OUTCOME KIND (prefix): "loud_both", "asymmetric",
-# "divergence". Policy:
+# Values are tools/check.py outcome kinds: "loud_both",
+# "spark_error"/"oracle_error", "divergence". Policy:
 #   - "loud_both" entries are DOCUMENTED-SAFE (both engines refuse;
 #     the contract says filter NaN at ingest for these).
-#   - "asymmetric"/"divergence" entries are PENDING FIXES, each
+#   - the one-sided and "divergence" entries are PENDING FIXES, each
 #     pre-committed to land with its host's gate seat (r14) using the
 #     r13 pattern: NaN POISONS a decimal-accumulated sum/avg exactly
 #     like the native float aggregate (qcommon.nonfinite_flag +
@@ -146,71 +144,15 @@ def make_mirror() -> str:
 
 
 def main() -> int:
-    import duckdb
-
-    import __spark_entry__ as m
     from earthquake_data_pipeline_spark.session import get_spark
 
     sf_dir = make_mirror()
-    only = set(sys.argv[1:])
     spark = get_spark(app_name="edps-nan-sweep", cpus=8,
                       shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    queries, oracles = m.queries(), m.oracle_sql()
-    findings: list[str] = []
-    n_pass = n_total = 0
-    for name, fn in queries.items():
-        if only and name not in only:
-            continue
-        if name not in oracles:
-            continue
-        n_total += 1
-        s_err = d_err = ""
-        got = want = None
-        try:
-            got = normalize(fn(spark, sf_dir).toPandas())
-        except Exception as e:  # noqa: BLE001
-            s_err = f"{type(e).__name__}: {str(e)[:160]}"
-        try:
-            want = normalize(con.execute(oracles[name]).fetchdf())
-        except Exception as e:  # noqa: BLE001
-            d_err = f"{type(e).__name__}: {str(e)[:160]}"
-        if s_err and d_err:
-            outcome = "loud_both"
-        elif s_err or d_err:
-            outcome = f"asymmetric ({'spark' if s_err else 'duck'} errored: {s_err or d_err})"
-        elif len(got) != len(want) or value_repr(got) != value_repr(want):
-            outcome = "divergence"
-        else:
-            outcome = "match"
-        expected = KNOWN_NAN_BEHAVIOR.get(name, "match")
-        kind = outcome.split(" ")[0]
-        if outcome == "match" and name in KNOWN_NAN_BEHAVIOR:
-            # a triaged entry that now MATCHES is stale — fail like a
-            # regression so expectation-table drift is never invisible
-            # (ADVICE r13: the old pass-through hid fixed entries)
-            findings.append(
-                f"{name}: expected {expected}, now matches — remove the "
-                f"stale KNOWN_NAN_BEHAVIOR entry"
-            )
-            print(f"NAN  {name}: match (stale entry: expected {expected})",
-                  flush=True)
-        elif kind == expected:
-            n_pass += 1
-            print(f"ok   {name}: {outcome}", flush=True)
-        else:
-            findings.append(f"{name}: expected {expected}, got {outcome}")
-            print(f"NAN  {name}: {outcome}", flush=True)
-    print(f"\n{n_pass}/{n_total} as documented")
-    if findings:
-        print("\n".join(findings))
-        return 1
-    return 0
+    n_ok, findings = sweep(spark, oracle(sf_dir), sf_dir, sys.argv[1:],
+                           expected=KNOWN_NAN_BEHAVIOR)
+    print(f"\n{n_ok}/{n_ok + len(findings)} as documented", *findings, sep="\n")
+    return 1 if findings else 0
 
 
 if __name__ == "__main__":

@@ -23,13 +23,9 @@ Usage: python tools/partition_sweep_check.py [n_partitions ...]
 
 from __future__ import annotations
 
-import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from check import TABLES, normalize, value_repr  # noqa: E402
+from check import oracle, sweep
 
 _SRC = "/root/testdata/sf0.001"
 
@@ -38,64 +34,19 @@ KNOWN_PARTITION_DIVERGENCES: dict[str, str] = {}
 
 
 def main() -> int:
-    import duckdb
-
-    import __spark_entry__ as m
     from earthquake_data_pipeline_spark.session import get_spark
 
     settings = [int(a) for a in sys.argv[1:]] or [3, 257]
     spark = get_spark(app_name="edps-partition-sweep", cpus=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{_SRC}/{t}.parquet')"
-        )
-    queries, oracles = m.queries(), m.oracle_sql()
-    findings: list[str] = []
-    n_pass = n_total = 0
+    con = oracle(_SRC)
+    n_ok, findings = 0, []
     for nparts in settings:
         spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
-        for name, fn in queries.items():
-            if name not in oracles:
-                continue
-            n_total += 1
-            expected = KNOWN_PARTITION_DIVERGENCES.get(f"{name}@{nparts}")
-            outcome = "match"
-            err = ""
-            try:
-                got = normalize(fn(spark, _SRC).toPandas())
-                want = normalize(con.execute(oracles[name]).fetchdf())
-                if len(got) != len(want) or value_repr(got) != value_repr(
-                    want
-                ):
-                    outcome = "divergence"
-            except Exception as e:  # noqa: BLE001 - axis harness records
-                outcome = "spark_error"
-                err = f" [{type(e).__name__}: {str(e)[:120]}]"
-            if expected is None and outcome != "match":
-                findings.append(
-                    f"{name}@{nparts}: NEW partition-count {outcome}{err}"
-                )
-            elif expected is not None and outcome != expected:
-                findings.append(
-                    f"{name}@{nparts}: expected {expected}, got "
-                    f"{outcome}{err}"
-                )
-            else:
-                n_pass += 1
-            tag = (
-                "ok"
-                if not findings
-                or not findings[-1].startswith(f"{name}@{nparts}:")
-                else "PART"
-            )
-            print(f"{tag} {name}@{nparts}: {outcome}{err}", flush=True)
-    print(f"\n{n_pass}/{n_total} as documented")
-    if findings:
-        print("\n".join(findings))
-        return 1
-    return 0
+        n, f = sweep(spark, con, _SRC, expected=KNOWN_PARTITION_DIVERGENCES,
+                     tag=f"@{nparts}")
+        n_ok, findings = n_ok + n, findings + f
+    print(f"\n{n_ok}/{n_ok + len(findings)} as documented", *findings, sep="\n")
+    return 1 if findings else 0
 
 
 if __name__ == "__main__":

@@ -37,10 +37,11 @@ Prints one markdown table per guard (paste into DESIGN.md).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 PAIRS_PER_DOC_MAX = 4.0
 SUPERLINEAR_TOL = 2.0

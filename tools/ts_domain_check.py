@@ -36,9 +36,9 @@ Mirror mutations of sf0.001 (deterministic, event_id-keyed):
   VERDICT r13 item 7: makes funnel_windowed's within_s pin
   axis-enforced).
 
-Outcome classes mirror nan_mirror_check: ``match`` / ``loud_both`` /
-asymmetric / divergence, with ``KNOWN_TS_BEHAVIOR`` as the triaged
-expectation table (kind-matched so regressions still flag).
+Outcome classes are the shared harness's (tools/check.py): ``match`` /
+``loud_both`` / ``spark_error`` / ``oracle_error`` / ``divergence``,
+with ``KNOWN_TS_BEHAVIOR`` as the triaged expectation table.
 
 Usage: python tools/ts_domain_check.py [query ...]
 """
@@ -48,11 +48,7 @@ from __future__ import annotations
 import os
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from check import TABLES, normalize, value_repr  # noqa: E402
+from check import TABLES, oracle, sweep
 
 _MIRROR = "/tmp/edps-ts-sf"
 _SRC = "/root/testdata/sf0.001"
@@ -61,8 +57,9 @@ _SHIFT_BACK_US = 120 * 365 * 86_400_000_000  # ~120 years
 _SHIFT_FWD_US = 250 * 365 * 86_400_000_000  # ~250 years
 
 # query -> expected non-match outcome (triage results, r13
-# continuation session). Matching is by OUTCOME KIND, exactly like
-# KNOWN_NAN_BEHAVIOR. An absent entry means the query must MATCH.
+# continuation session). Values are tools/check.py outcome kinds,
+# exactly like KNOWN_NAN_BEHAVIOR. An absent entry means the query
+# must MATCH.
 # EMPTY since the same-session close: the 12 first-sweep flags (the
 # unix_timestamp truncation class + the trend_fit oracle int64
 # overflow) were all fixed with seats — see DESIGN.md's fourteenth-
@@ -138,74 +135,15 @@ def make_mirror() -> str:
 
 
 def main() -> int:
-    import duckdb
-
-    import __spark_entry__ as m
     from earthquake_data_pipeline_spark.session import get_spark
 
     sf_dir = make_mirror()
-    only = set(sys.argv[1:])
     spark = get_spark(app_name="edps-ts-sweep", cpus=8,
                       shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    queries, oracles = m.queries(), m.oracle_sql()
-    findings: list[str] = []
-    n_pass = n_total = 0
-    for name, fn in queries.items():
-        if only and name not in only:
-            continue
-        if name not in oracles:
-            continue
-        n_total += 1
-        s_err = d_err = ""
-        got = want = None
-        try:
-            got = normalize(fn(spark, sf_dir).toPandas())
-        except Exception as e:  # noqa: BLE001
-            s_err = f"{type(e).__name__}: {str(e)[:160]}"
-        try:
-            want = normalize(con.execute(oracles[name]).fetchdf())
-        except Exception as e:  # noqa: BLE001
-            d_err = f"{type(e).__name__}: {str(e)[:160]}"
-        if s_err and d_err:
-            outcome = "loud_both"
-        elif s_err or d_err:
-            outcome = (
-                f"asymmetric ({'spark' if s_err else 'duck'} errored: "
-                f"{s_err or d_err})"
-            )
-        elif len(got) != len(want) or value_repr(got) != value_repr(want):
-            outcome = "divergence"
-        else:
-            outcome = "match"
-        expected = KNOWN_TS_BEHAVIOR.get(name, "match")
-        kind = outcome.split(" ")[0]
-        if outcome == "match" and name in KNOWN_TS_BEHAVIOR:
-            # a triaged entry that now MATCHES is stale — fail like a
-            # regression so expectation-table drift is never invisible
-            # (ADVICE r13: the old pass-through hid fixed entries)
-            findings.append(
-                f"{name}: expected {expected}, now matches — remove the "
-                f"stale KNOWN_TS_BEHAVIOR entry"
-            )
-            print(f"TS   {name}: match (stale entry: expected {expected})",
-                  flush=True)
-        elif kind == expected:
-            n_pass += 1
-            print(f"ok   {name}: {outcome}", flush=True)
-        else:
-            findings.append(f"{name}: expected {expected}, got {outcome}")
-            print(f"TS   {name}: {outcome}", flush=True)
-    print(f"\n{n_pass}/{n_total} as documented")
-    if findings:
-        print("\n".join(findings))
-        return 1
-    return 0
+    n_ok, findings = sweep(spark, oracle(sf_dir), sf_dir, sys.argv[1:],
+                           expected=KNOWN_TS_BEHAVIOR)
+    print(f"\n{n_ok}/{n_ok + len(findings)} as documented", *findings, sep="\n")
+    return 1 if findings else 0
 
 
 if __name__ == "__main__":

@@ -38,10 +38,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from check import TABLES, normalize, value_repr  # noqa: E402
+from check import TABLES, oracle, sweep
 
 _SKEW_DIR = "/tmp/edps-skew-sf"
 _SRC = "/root/testdata/sf0.001"
@@ -116,62 +113,14 @@ def make_skew_mirror() -> str:
 
 
 def main() -> int:
-    import duckdb
-
-    import __spark_entry__ as m
     from earthquake_data_pipeline_spark.session import get_spark
 
-    only = set(sys.argv[1:])
     sf_dir = make_skew_mirror()
     spark = get_spark(app_name="edps-skew-check", cpus=8, shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
-    queries, oracles = m.queries(), m.oracle_sql()
-    findings: list[str] = []
-    n_pass = 0
-    n_total = 0
-    for name, fn in queries.items():
-        if name not in oracles:
-            continue  # rows-only streaming checks: out of axis scope
-        if only and name not in only:
-            continue
-        n_total += 1
-        expected = KNOWN_SKEW_DIVERGENCES.get(name)
-        outcome = "match"
-        err = ""
-        try:
-            got = normalize(fn(spark, sf_dir).toPandas())
-            want = normalize(con.execute(oracles[name]).fetchdf())
-            if len(got) != len(want) or value_repr(got) != value_repr(want):
-                outcome = "divergence"
-        except Exception as e:  # noqa: BLE001 - axis harness records all
-            outcome = "spark_error"
-            err = f" [{type(e).__name__}: {str(e)[:120]}]"
-        if expected is None and outcome != "match":
-            findings.append(f"{name}: NEW value-skew {outcome}{err}")
-        elif expected is not None and outcome != expected:
-            findings.append(
-                f"{name}: expected {expected}, got {outcome}{err} — "
-                "operator changed, re-audit and update the table"
-            )
-        else:
-            n_pass += 1
-        ok = (
-            "ok"
-            if not findings or not findings[-1].startswith(name + ":")
-            else "SKEW"
-        )
-        print(f"{ok} {name}: {outcome}{err}", flush=True)
-    print(f"\n{n_pass}/{n_total} as documented")
-    if findings:
-        print("\n".join(findings))
-        return 1
-    return 0
+    n_ok, findings = sweep(spark, oracle(sf_dir), sf_dir, sys.argv[1:],
+                           expected=KNOWN_SKEW_DIVERGENCES)
+    print(f"\n{n_ok}/{n_ok + len(findings)} as documented", *findings, sep="\n")
+    return 1 if findings else 0
 
 
 if __name__ == "__main__":
