@@ -5,7 +5,10 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
 value-hash → CORRECTNESS_r{N}.json).
 
-Implementation lives in ``earthquake_data_pipeline_spark/driver_queries.py``;
+Implementation lives in ``earthquake_data_pipeline_spark/driver_queries.py``,
+which registers every catalog module's (name, build fn, oracle SQL) table
+through the registry in ``earthquake_data_pipeline_spark/catalog.py`` and
+puts the gate head of ``earthquake_data_pipeline_spark/gate.py`` first;
 this file stays a thin adapter.
 """
 

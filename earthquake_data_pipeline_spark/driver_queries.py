@@ -7,6 +7,11 @@ Contract (see __spark_entry__.py): every query is a callable
 views named after the parquet files. Column names AND types are aligned on
 both sides (the driver hashes values after sorting columns by name).
 
+Each catalog module declares its queries once, in its ``CATALOG`` table of
+(name, build fn, oracle SQL). ``QUERIES``/``ORACLE`` are registered from the
+five tables in order (this module, ext, stream, r6, r7; see catalog.py),
+then ``gate.rotate`` moves the driver's gate head to the front.
+
 Determinism rules applied throughout (SURVEY §7 hard-part 5):
 - keep-any dedup → compare key columns only;
 - floating aggregates → round(×, 6) on both sides (ulp-order noise);
@@ -16,25 +21,28 @@ Determinism rules applied throughout (SURVEY §7 hard-part 5):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import (
+    driver_queries_ext,
+    driver_queries_r6,
+    driver_queries_r7,
+    driver_queries_stream,
+)
+from .catalog import register
 from .functions.scalar import case_rank, decade_of
+from .gate import rotate
 from .operators.cleaning import range_filter
 from .operators.dedup import dedup_keep_any
 from .operators.merge import anti_join_merge, high_water_mark_filter
-
-
-from .qcommon import (  # noqa: F401  (re-exported)
+from .qcommon import (
     LSH_BANDS,
     MINHASH_SEEDS,
     _TOKS_SQL,
     _fanout,
     _minhash_sql,
     _table,
-    _utc,
     reuse,
     round6x,
 )
@@ -52,7 +60,6 @@ def q_clean_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapped onto `events` (value≙magnitude, ts≙earthquake_datetime). Keep-any
     dedup survivor is nondeterministic → output the key columns only.
     """
-    _utc(spark)
     ev = _table(spark, sf_dir, "events")
     filtered = range_filter(
         ev.filter(F.col("value").isNotNull()), {"value": (0.0, 150.0)}
@@ -90,7 +97,6 @@ def q_yearly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds 4e12 rows/group; l_extendedprice < 1e6 → (8,2), accumulator
     (18,2) holds ~2.6e11 rows/group — both fail LOUD (decimal
     overflow) past the envelope, never wrap."""
-    _utc(spark)
     from .qcommon import round6x
 
     li = _table(spark, sf_dir, "lineitem")
@@ -139,7 +145,6 @@ SEVERITY_RANKS = {"Great": 1, "Major": 2, "Strong": 3, "Moderate": 4, "Light": 5
 def q_severity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D4+D5+A1+O3 (fact severity ladder + country_severe_earthquake_stats
     analog): CASE bucket on o_totalprice, count per bucket, rank-ordered."""
-    _utc(spark)
     orders = _table(spark, sf_dir, "orders")
     sev = F.when(F.col("o_totalprice") >= 400000.0, "Great")
     for bound, label in SEVERITY_THRESHOLDS[1:]:
@@ -192,7 +197,6 @@ ORDER BY CASE severity WHEN 'Great' THEN 1 WHEN 'Major' THEN 2 WHEN 'Strong' THE
 def q_top_k_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2+O4 (top_100_earthquake intended form): TakeOrderedAndProject, total
     tiebreak (price desc, key asc) for determinism."""
-    _utc(spark)
     orders = _table(spark, sf_dir, "orders")
     return (
         orders.select("o_orderkey", "o_custkey", "o_totalprice")
@@ -215,7 +219,6 @@ def q_region_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation (25) and region (5) are broadcast — no shuffle for the joins;
     the only exchange is the final group-by, exactly as at 100 TB.
     """
-    _utc(spark)
     cust = _table(spark, sf_dir, "customer")
     nation = _table(spark, sf_dir, "nation")
     region = _table(spark, sf_dir, "region")
@@ -255,7 +258,6 @@ ORDER BY 1
 def q_max_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4+R1 (top_countries_strongest_earthquake analog): max order value per
     nation through a two-hop join."""
-    _utc(spark)
     orders = _table(spark, sf_dir, "orders")
     cust = _table(spark, sf_dir, "customer")
     nation = _table(spark, sf_dir, "nation")
@@ -287,7 +289,6 @@ def q_conditional_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     by two engines can diverge at the last ulp, but integer div + a single
     IEEE-754 conversion is bit-identical everywhere.
     """
-    _utc(spark)
     ev = _table(spark, sf_dir, "events")
     flag = F.when(F.col("value") > 100.0, 1).otherwise(0)
     return (
@@ -330,7 +331,6 @@ ALERT_LIKE_RANKS = {"error": 1, "purchase": 2, "signup": 3, "click": 4}
 def q_in_list_case_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P8+D5+O3 (alert_level_frequency_stats analog): IN-list filter + CASE
     rank multi-key sort."""
-    _utc(spark)
     ev = _table(spark, sf_dir, "events")
     return (
         ev.filter(F.col("event_type").isin("error", "purchase", "signup", "click"))
@@ -368,7 +368,6 @@ def q_scalar_derivations(spark: SparkSession, sf_dir: str) -> DataFrame:
     r14 ADVICE fix, probe-pinned in test_functions.py.)
     Timestamps are output as formatted strings (engine-neutral hashing).
     """
-    _utc(spark)
     ev = _table(spark, sf_dir, "events")
     ms = F.unix_millis(F.col("ts"))
     return ev.select(
@@ -405,7 +404,6 @@ FROM events
 def q_merge_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R4/S13 (MERGE WHEN NOT MATCHED): rows of the increment whose key is
     absent from the accumulated table → exactly the rows a MERGE inserts."""
-    _utc(spark)
     ev = _table(spark, sf_dir, "events")
     existing = ev.filter(F.col("event_id") % 3 != 0)
     increment = ev.filter(F.col("ts") >= F.lit("2024-01-15").cast("timestamp"))
@@ -428,7 +426,6 @@ WHERE e.ts >= TIMESTAMP '2024-01-15'
 def q_high_water_mark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P10+A7/I1: scalar-subquery high-water mark — only rows strictly past
     max(ts) of the existing slice flow through."""
-    _utc(spark)
     ev = _table(spark, sf_dir, "events")
     existing = ev.filter(F.col("ts") < F.lit("2024-01-20").cast("timestamp"))
     return high_water_mark_filter(ev, existing, "ts").select("event_id", "user_id")
@@ -457,7 +454,6 @@ def q_union_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     one window task. The W1 window form stays the reference-parity
     face (stg_earthquake + the dedup_keep_first/dedup_row_number
     total-order parity test)."""
-    _utc(spark)
     from .operators.dedup import dedup_keep_first
 
     ev = _table(spark, sf_dir, "events").select(
@@ -490,7 +486,6 @@ ORDER BY event_type
 def q_top2_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window top-k per group (the OLAP face of W1's row_number): top-2
     events per user by value, deterministic tiebreak."""
-    _utc(spark)
     from pyspark.sql import Window
 
     ev = _table(spark, sf_dir, "events")
@@ -516,7 +511,6 @@ WHERE rn <= 2
 def q_stats_per_decade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3+D3+O2 (country_earthquake_stats_per_decade analog): 3-key groupBy
     with decade bucketing, ordered by frequency."""
-    _utc(spark)
     li = _table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_quantity") > 3)
@@ -570,7 +564,6 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the oracle regardless of summation order (a double sum at 1e9
     magnitude diverges past 6 dp at sf0.1+). Averages derive from the
     exact sums; round6x makes the final rounding tie-proof."""
-    _utc(spark)
     from .qcommon import round6x
 
     li = _table(spark, sf_dir, "lineitem")
@@ -645,7 +638,6 @@ def q_fact_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-join path — both sides hash-exchange on the key; AQE picks
     broadcast/shuffle-hash/sort-merge by observed sizes. Revenue per
     order priority."""
-    _utc(spark)
     li = _table(spark, sf_dir, "lineitem")
     orders = _table(spark, sf_dir, "orders")
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -673,7 +665,6 @@ ORDER BY o_orderpriority
 def q_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi + anti join census (the how='...' variants SURVEY §2.4 notes we
     get for free): customers with vs without orders, per market segment."""
-    _utc(spark)
     cust = _table(spark, sf_dir, "customer")
     orders = _table(spark, sf_dir, "orders")
     with_orders = (
@@ -747,7 +738,6 @@ def q_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R2 — point-in-polygon left join (numpy ray-cast mapInPandas over a
     broadcast polygon dim). Oracle expresses the same rectangles as range
     predicates — verifying the geometry kernel against closed-form SQL."""
-    _utc(spark)
     from .operators.enrichment import spatial_join
 
     pts = _events_with_coords(spark, sf_dir)
@@ -784,7 +774,6 @@ REGEX_TOKENS = ["vector", "customer", "spark", "window", "stream"]
 def q_regex_token_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R3/F1 — first-match-wins word-token containment join on documents
     (broadcast nested-loop crossJoin + RLIKE + priority row_number)."""
-    _utc(spark)
     from .operators.enrichment import regex_token_join
 
     # _fanout removed (r18, guide §2.4 — an exchange added "for
@@ -811,7 +800,6 @@ FROM documents
 def q_enrich_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D9/R5 + R1 — coalesce-fill of spatial misses from a broadcast lookup
     (the reference's index-aligned fillna restated as key-join + coalesce)."""
-    _utc(spark)
     from .operators.enrichment import spatial_join
 
     pts = _events_with_coords(spark, sf_dir)
@@ -880,7 +868,6 @@ def q_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     regex_token_match, enrich_coalesce); this proves the composition,
     using event_id as the natural join key (the no-materialization scale
     path of operators/enrichment.py::enrich_events)."""
-    _utc(spark)
     from .operators.enrichment import enrich_events
 
     ev = _table(spark, sf_dir, "events").select(
@@ -947,7 +934,6 @@ FROM fb
 
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens + BPE-ish regex pieces, one scan."""
-    _utc(spark)
     from .operators.text import token_count
 
     docs = _fanout(_table(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -965,7 +951,6 @@ FROM documents
 
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: stopword ratio, punctuation density, composite score."""
-    _utc(spark)
     from .operators.text import quality_score
 
     docs = _fanout(_table(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -1002,7 +987,6 @@ FROM m
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID heuristic: marker-token counts, argmax, lexicographic ties."""
-    _utc(spark)
     from .operators.text import language_id
 
     docs = _fanout(_table(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -1034,7 +1018,6 @@ FROM s
 
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: normalized-text fingerprint → hash-groupBy keep-min-id."""
-    _utc(spark)
     from .operators.dedup import exact_dedup
     from .operators.text import fingerprint
 
@@ -1057,7 +1040,6 @@ GROUP BY 1
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH candidate pairs: shingle → 12 md5-minhashes → 4 band
     keys → bucket self-join (id_a < id_b)."""
-    _utc(spark)
     from .operators.fuzzy_dedup import minhash_lsh_pairs
 
     docs = _fanout(_table(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -1075,7 +1057,6 @@ def q_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's insert-only MERGE specializes (S13). Updated prices are
     derived in exact decimal (price × 1.10 at scale 4) so every value is
     bit-identical to the oracle's."""
-    _utc(spark)
     from .operators.merge import upsert_merge
 
     orders = _table(spark, sf_dir, "orders")
@@ -1129,7 +1110,6 @@ def q_url_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-domain stats with a canonical doc per domain — the URL-based
     dedup/mixing step of a crawl pipeline. URLs are seeded
     deterministically (the corpus has none)."""
-    _utc(spark)
     docs = _fanout(
         _table(spark, sf_dir, "documents").select("doc_id", "text", "source")
     )
@@ -1186,7 +1166,6 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-token / duplicate-bigram ratios per document — the filters
     that catch boilerplate and degenerate text before training. Ratios
     are integer÷integer + round(6): exact cross-engine parity."""
-    _utc(spark)
     from .operators.text import repetition_signals
 
     # _fanout removed (r18, guide §2.4): A/B 0.90 s -> 0.67 s at sf0.1
@@ -1227,7 +1206,6 @@ def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equal-width histogram (width_bucket shape): o_totalprice binned at
     50k, count + decimal-exact sum + span per bin. One map-side bin
     derivation + one hash aggregate — profiling at scan speed."""
-    _utc(spark)
     orders = _table(spark, sf_dir, "orders")
     bin_col = F.floor(F.col("o_totalprice") / 50000.0).cast("int")
     return (
@@ -1262,7 +1240,6 @@ def q_eval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmark-contamination sweep before training. One explode per side,
     an equi-join on the shingle (shuffle-bounded by shingle hash — the
     scale shape), distinct-counted per training doc."""
-    _utc(spark)
     from .operators.fuzzy_dedup import shingles_of
 
     docs = _fanout(_table(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -1316,7 +1293,6 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     term; the corpus size joins in as a broadcast 1-row aggregate (the
     plan stays fully lazy); ranking is one window.
     """
-    _utc(spark)
     from pyspark.sql import Window
 
     from .operators.text import tokens_of
@@ -1387,7 +1363,6 @@ def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified mixture sampling: per-language keep rates
     decided by a pure md5 hash of doc_id — reproducible across cluster
     shapes and reruns (df.sample() is not), zero shuffle."""
-    _utc(spark)
     from .operators.sampling import stratified_sample_by_hash
 
     docs = _fanout(_table(spark, sf_dir, "documents").select("doc_id", "lang"))
@@ -1424,7 +1399,6 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the corpus (documents.text has none), then redacted; the output
     carries per-category counts and an md5 of the redacted text so the
     oracle checks the full replacement byte-for-byte."""
-    _utc(spark)
     from .operators.text import redact_pii
 
     docs = _fanout(_table(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -1518,7 +1492,6 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop being quadratic (round-10 probe: 8k identical docs, 32.0M
     clique pairs / 100 s → linear under the star guard). Fires at both
     gate scales (max bench bucket 3 at sf0.01, 7 at sf0.1)."""
-    _utc(spark)
     from .operators.dedup import connected_components
     from .operators.fuzzy_dedup import minhash_lsh_pairs
 
@@ -1553,7 +1526,6 @@ ORDER BY doc_id
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash 32-bit fingerprints over distinct tokens (md5-derived bits,
     majority vote, ties → 1)."""
-    _utc(spark)
     from .operators.fuzzy_dedup import simhash
 
     docs = _fanout(_table(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -1590,7 +1562,6 @@ GROUP BY doc_id
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard on a bounded pair set (doc_id < 40) — the
     verification stage of the LSH pipeline."""
-    _utc(spark)
     from .operators.fuzzy_dedup import ngram_jaccard_pairs
 
     docs = (
@@ -1625,7 +1596,6 @@ def q_lsh_jaccard_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold. This is the documented production shape
     (fuzzy_dedup.ngram_jaccard_pairs docstring); here it is proven
     through the gate end to end."""
-    _utc(spark)
     from .operators.fuzzy_dedup import minhash_lsh_pairs, shingles_of
 
     docs = _fanout(_table(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -1697,7 +1667,6 @@ ORDER BY 1, 2
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 for query vectors (vec_id < 10): broadcast
     queries × corpus scan, JVM fold dot products, per-query row_number."""
-    _utc(spark)
     from .operators.similarity import cosine_topk
 
     emb = _fanout(_table(spark, sf_dir, "embeddings"))
@@ -1735,7 +1704,6 @@ SELECT query_id, neighbor_id, cosine_sim, rank FROM ranked WHERE rank <= 10
 
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cosine ≥ 0.4, id_a < id_b)."""
-    _utc(spark)
     from .operators.similarity import embedding_near_dup_pairs
 
     emb = _fanout(_table(spark, sf_dir, "embeddings"))
@@ -1761,7 +1729,6 @@ def q_embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact cosine re-rank on candidates only — no driver materialization
     (the 100 TB path next to the small-corpus GEMM of
     q_embedding_near_dup). Deterministic planes → full SQL oracle."""
-    _utc(spark)
     from .operators.similarity import embedding_near_dup_pairs_lsh
 
     # _fanout removed (r18, guide §2.4): the widening repartition cost
@@ -1835,7 +1802,6 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale path. Fully oracle-checked: the md5-derived planes are
     deterministic, so the same signature + bucket join + re-rank is
     expressed in DuckDB SQL (plane vectors inlined as literals)."""
-    _utc(spark)
     from .operators.similarity import lsh_bucket_topk
 
     # _fanout removed (r18, guide §2.4): the widening repartition cost
@@ -1903,7 +1869,6 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagging, cell join, re-rank) is oracle-checked against brute-force
     SQL. The nprobe < n_centroids recall trade-off is property-tested in
     tests/test_llm_ops.py."""
-    _utc(spark)
     from .operators.similarity import ivf_topk
 
     # _fanout removed (r18, guide §2.4): the widening repartition cost
@@ -1921,7 +1886,6 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-window chunking (64-token windows, 16 overlap): one row per
     chunk with a content hash — the LLM chunker as a scan-speed map.
     Output hashes, not chunk text, to keep the comparison payload small."""
-    _utc(spark)
     from .operators.text import chunk_text
 
     docs = _fanout(_table(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -1964,7 +1928,6 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup groupBy and the final stats groupBy. The near-dup stage
     (minhash_lsh) plugs in between dedup and stats in production — kept
     out here so the oracle stays exact."""
-    _utc(spark)
     from .operators.text import fingerprint, quality_score
 
     docs = _fanout(
@@ -2036,7 +1999,6 @@ def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     (label, pos, avg_comp) — engine-neutral, no array-representation
     ambiguity in the value hash. The shuffle carries (label × dim) partial
     sums, not vectors × rows — scan-bound at any corpus size."""
-    _utc(spark)
     # _fanout removed (r18, guide §2.4): the widening repartition cost
     # more than this query's downstream vector work at sf0.1 (A/B in
     # OPTIMIZATION_r18.md); on a wide cluster scan the guard never fired.
@@ -2100,7 +2062,6 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing: text→binary payload → Arrow-batched
     mapInPandas decode-stub → (byte_len, content_hash). The oracle checks
     the binary path end-to-end (md5 over utf-8 bytes)."""
-    _utc(spark)
     from .operators.multimodal import extract_features
 
     docs = _fanout(_table(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -2137,7 +2098,6 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle is the UNSALTED SQL join, proving through the gate that
     salting is semantics-free. Deterministic xxhash64 salt keeps retried
     tasks identical; right side replicated salt_factor times."""
-    _utc(spark)
     from .operators.scale import salted_join
 
     li = _fanout(
@@ -2181,7 +2141,6 @@ def q_usgs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-exact sums (instead of the model's double avgs) so the value
     hash is engine-neutral; the avg form lives in
     plans.models.yearly_earthquake_stats (registry-tested)."""
-    _utc(spark)
     from .operators.cleaning import clean_events
     from .plans.models import fact_earthquake_data, stg_earthquake
     from .sources.usgs import UsgsDataSource
@@ -2257,195 +2216,65 @@ ORDER BY 1
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "clean_events": q_clean_events,
-    "yearly_stats": q_yearly_stats,
-    "severity_buckets": q_severity_buckets,
-    "top_k_orders": q_top_k_orders,
-    "region_rollup": q_region_rollup,
-    "max_per_group": q_max_per_group,
-    "conditional_ratio": q_conditional_ratio,
-    "in_list_case_sort": q_in_list_case_sort,
-    "scalar_derivations": q_scalar_derivations,
-    "merge_anti_join": q_merge_anti_join,
-    "high_water_mark": q_high_water_mark,
-    "union_dedup": q_union_dedup,
-    "top2_per_user": q_top2_per_user,
-    "stats_per_decade": q_stats_per_decade,
-    "pricing_summary": q_pricing_summary,
-    "fact_fact_join": q_fact_fact_join,
-    "semi_anti_join": q_semi_anti_join,
-    "spatial_join": q_spatial_join,
-    "regex_token_match": q_regex_token_match,
-    "enrich_coalesce": q_enrich_coalesce,
-    "enrich_events": q_enrich_events,
-    "token_stats": q_token_stats,
-    "text_quality": q_text_quality,
-    "lang_id": q_lang_id,
-    "exact_dedup": q_exact_dedup,
-    "minhash_lsh": q_minhash_lsh,
-    "dedup_components": q_dedup_components,
-    "upsert_merge": q_upsert_merge,
-    "url_domains": q_url_domains,
-    "doc_repetition": q_doc_repetition,
-    "value_histogram": q_value_histogram,
-    "eval_overlap": q_eval_overlap,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "hash_sample": q_hash_sample,
-    "pii_redact": q_pii_redact,
-    "simhash": q_simhash,
-    "ngram_jaccard": q_ngram_jaccard,
-    "lsh_jaccard_refine": q_lsh_jaccard_refine,
-    "cosine_topk": q_cosine_topk,
-    "embedding_near_dup": q_embedding_near_dup,
-    "embedding_near_dup_lsh": q_embedding_near_dup_lsh,
-    "ann_lsh": q_ann_lsh,
-    "ann_ivf": q_ann_ivf,
-    "label_centroids": q_label_centroids,
-    "corpus_curation": q_corpus_curation,
-    "chunk_documents": q_chunk_documents,
-    "multimodal_features": q_multimodal_features,
-    "salted_join": q_salted_join,
-    "usgs_pipeline": q_usgs_pipeline,
-}
-
-ORACLE: dict[str, str] = {
-    "clean_events": SQL_CLEAN_EVENTS,
-    "yearly_stats": SQL_YEARLY_STATS,
-    "severity_buckets": SQL_SEVERITY_BUCKETS,
-    "top_k_orders": SQL_TOP_K_ORDERS,
-    "region_rollup": SQL_REGION_ROLLUP,
-    "max_per_group": SQL_MAX_PER_GROUP,
-    "conditional_ratio": SQL_CONDITIONAL_RATIO,
-    "in_list_case_sort": SQL_IN_LIST_CASE_SORT,
-    "scalar_derivations": SQL_SCALAR_DERIVATIONS,
-    "merge_anti_join": SQL_MERGE_ANTI_JOIN,
-    "high_water_mark": SQL_HIGH_WATER_MARK,
-    "union_dedup": SQL_UNION_DEDUP,
-    "top2_per_user": SQL_TOP2_PER_USER,
-    "stats_per_decade": SQL_STATS_PER_DECADE,
-    "pricing_summary": SQL_PRICING_SUMMARY,
-    "fact_fact_join": SQL_FACT_FACT_JOIN,
-    "semi_anti_join": SQL_SEMI_ANTI_JOIN,
-    "spatial_join": SQL_SPATIAL_JOIN,
-    "regex_token_match": SQL_REGEX_TOKEN_MATCH,
-    "enrich_coalesce": SQL_ENRICH_COALESCE,
-    "enrich_events": SQL_ENRICH_EVENTS,
-    "token_stats": SQL_TOKEN_STATS,
-    "text_quality": SQL_TEXT_QUALITY,
-    "lang_id": SQL_LANG_ID,
-    "exact_dedup": SQL_EXACT_DEDUP,
-    "minhash_lsh": SQL_MINHASH_LSH,
-    "dedup_components": SQL_DEDUP_COMPONENTS,
-    "upsert_merge": SQL_UPSERT_MERGE,
-    "url_domains": SQL_URL_DOMAINS,
-    "doc_repetition": SQL_DOC_REPETITION,
-    "value_histogram": SQL_VALUE_HISTOGRAM,
-    "eval_overlap": SQL_EVAL_OVERLAP,
-    "tfidf_top_terms": SQL_TFIDF_TOP_TERMS,
-    "hash_sample": SQL_HASH_SAMPLE,
-    "pii_redact": SQL_PII_REDACT,
-    "simhash": SQL_SIMHASH,
-    "ngram_jaccard": SQL_NGRAM_JACCARD,
-    "lsh_jaccard_refine": SQL_LSH_JACCARD_REFINE,
-    "cosine_topk": SQL_COSINE_TOPK,
-    "embedding_near_dup": SQL_EMBEDDING_NEAR_DUP,
-    "embedding_near_dup_lsh": SQL_EMBEDDING_NEAR_DUP_LSH,
-    "ann_lsh": SQL_ANN_LSH,
-    "ann_ivf": SQL_ANN_IVF,
-    "label_centroids": SQL_LABEL_CENTROIDS,
-    "corpus_curation": SQL_CORPUS_CURATION,
-    "chunk_documents": SQL_CHUNK_DOCUMENTS,
-    "multimodal_features": SQL_MULTIMODAL_FEATURES,
-    "salted_join": SQL_SALTED_JOIN,
-    "usgs_pipeline": SQL_USGS_PIPELINE,
-}
-
-
-from .driver_queries_ext import ORACLE_EXT, QUERIES_EXT  # noqa: E402
-from .driver_queries_r6 import ORACLE_R6, QUERIES_R6  # noqa: E402
-from .driver_queries_stream import ORACLE_STREAM, QUERIES_STREAM  # noqa: E402
-
-QUERIES.update(QUERIES_EXT)
-ORACLE.update(ORACLE_EXT)
-QUERIES.update(QUERIES_STREAM)
-ORACLE.update(ORACLE_STREAM)
-QUERIES.update(QUERIES_R6)
-ORACLE.update(ORACLE_R6)
-
-from .driver_queries_r7 import ORACLE_R7, QUERIES_R7  # noqa: E402
-
-QUERIES.update(QUERIES_R7)
-ORACLE.update(ORACLE_R7)
-
-# Gate-window rotation: the driver verifies exactly the FIRST 50 entries
-# of queries() each round. Rotation policy (formalized round 6, VERDICT
-# r5 items 1-2):
-#   1. every query that has NEVER had a driver CORRECTNESS row leads;
-#   2. then every query whose code, oracle, or CALLED OPERATOR changed
-#      this round;
-#   3. shared-helper-churn rule: any round that touches qcommon.py,
-#      functions/scalar.py, or tools/check.py must also seat one
-#      sentinel query per table type — events / lineitem / documents /
-#      embeddings — even if no query changed;
-#   4. remaining slots go to the queries with the OLDEST banked row.
-#
-# ROUND-18 HEAD (optimization round 2): proof debt enters at 0/148;
-# last-green histogram entering: r14×8, r15×45, r16×45, r17×50. Per
-# the committed r18 sketch (SURVEY) and the rotation policy:
-# (1) round-18 churn — every query whose code or CALLED OPERATOR
-#     changed this round: the fuzzy_dedup shared-shingle params
-#     (tokens_df/tokens_col — seats every minhash_lsh_pairs /
-#     prefix_filter_join consumer), the _cum_value_counts one-window
-#     rewrite + percentile_moments_by_counts fusion (seats every
-#     by-counts consumer), the nine measured fanout removals, the
-#     bloom_prune fanout addition, the embeddings-family fanout
-#     removals — PLUS the two driver-side regression adjudication
-#     seats VERDICT r17 item 1 requires (dedup_keep_list,
-#     cluster_purity; quiet A/Bs in OPTIMIZATION_r18.md).
-# (2) the r14 bank remainder (7 rows after tfidf_top_terms seats as
-#     churn — retiring the r14 generation): token_bucket,
-#     top2_per_user, top_k_orders, trend_fit, url_domains,
-#     usgs_pipeline, value_histogram.
-# (3) the r15 bank alphabetically until the window fills (17 rows,
-#     array_suite..enrich_coalesce; the rest of the r15 bank rolls
-#     to r19). qcommon.py, functions/scalar.py, tools/check.py are
-#     untouched this round so rule-3 sentinels are not forced; events
-#     (json_extract, usgs_pipeline), lineitem (percentile_stats,
-#     trimmed_mean), documents (boilerplate_strip, prefix_filter_join),
-#     embeddings (cluster_purity) are covered regardless.
-_GATE_FIRST = [
-    # (1) round-18 churn (26 — the last five are the embeddings-family
-    # fanout removals landed after the first rotation cut):
-    "lsh_recall_audit", "prefix_filter_join", "minhash_lsh",
-    "dedup_components", "lsh_jaccard_refine", "dedup_keep_list",
-    "percentile_stats", "quality_deciles", "robust_scaling",
-    "trimmed_mean", "mad_outliers", "json_extract", "boilerplate_strip",
-    "pmi_collocations", "bigram_lm_score", "tfidf_top_terms",
-    "url_canonical", "regex_token_match", "doc_repetition",
-    "bloom_prune", "cluster_purity",
-    "kmeans_clusters", "label_centroids", "ann_lsh", "ann_ivf",
-    "embedding_near_dup_lsh",
-    # (2) the r14 bank, retired in full (7 rows):
-    "token_bucket", "top2_per_user", "top_k_orders", "trend_fit",
-    "url_domains", "usgs_pipeline", "value_histogram",
-    # (3) the r15 bank alphabetically through enrich_coalesce (17 rows;
-    # enrich_events..expectations_report roll to r19 with the rest):
-    "array_suite", "bm25_topk", "boolean_search", "char_diversity",
-    "chunk_documents", "clean_events", "cms_frequency", "column_profile",
-    "compaction_plan", "conditional_ratio", "corr_stats",
-    "correlated_subquery", "cube_agg", "datetime_suite", "distinct_agg",
-    "domain_mixture", "enrich_coalesce",
+CATALOG = [
+    ("clean_events", q_clean_events, SQL_CLEAN_EVENTS),
+    ("yearly_stats", q_yearly_stats, SQL_YEARLY_STATS),
+    ("severity_buckets", q_severity_buckets, SQL_SEVERITY_BUCKETS),
+    ("top_k_orders", q_top_k_orders, SQL_TOP_K_ORDERS),
+    ("region_rollup", q_region_rollup, SQL_REGION_ROLLUP),
+    ("max_per_group", q_max_per_group, SQL_MAX_PER_GROUP),
+    ("conditional_ratio", q_conditional_ratio, SQL_CONDITIONAL_RATIO),
+    ("in_list_case_sort", q_in_list_case_sort, SQL_IN_LIST_CASE_SORT),
+    ("scalar_derivations", q_scalar_derivations, SQL_SCALAR_DERIVATIONS),
+    ("merge_anti_join", q_merge_anti_join, SQL_MERGE_ANTI_JOIN),
+    ("high_water_mark", q_high_water_mark, SQL_HIGH_WATER_MARK),
+    ("union_dedup", q_union_dedup, SQL_UNION_DEDUP),
+    ("top2_per_user", q_top2_per_user, SQL_TOP2_PER_USER),
+    ("stats_per_decade", q_stats_per_decade, SQL_STATS_PER_DECADE),
+    ("pricing_summary", q_pricing_summary, SQL_PRICING_SUMMARY),
+    ("fact_fact_join", q_fact_fact_join, SQL_FACT_FACT_JOIN),
+    ("semi_anti_join", q_semi_anti_join, SQL_SEMI_ANTI_JOIN),
+    ("spatial_join", q_spatial_join, SQL_SPATIAL_JOIN),
+    ("regex_token_match", q_regex_token_match, SQL_REGEX_TOKEN_MATCH),
+    ("enrich_coalesce", q_enrich_coalesce, SQL_ENRICH_COALESCE),
+    ("enrich_events", q_enrich_events, SQL_ENRICH_EVENTS),
+    ("token_stats", q_token_stats, SQL_TOKEN_STATS),
+    ("text_quality", q_text_quality, SQL_TEXT_QUALITY),
+    ("lang_id", q_lang_id, SQL_LANG_ID),
+    ("exact_dedup", q_exact_dedup, SQL_EXACT_DEDUP),
+    ("minhash_lsh", q_minhash_lsh, SQL_MINHASH_LSH),
+    ("dedup_components", q_dedup_components, SQL_DEDUP_COMPONENTS),
+    ("upsert_merge", q_upsert_merge, SQL_UPSERT_MERGE),
+    ("url_domains", q_url_domains, SQL_URL_DOMAINS),
+    ("doc_repetition", q_doc_repetition, SQL_DOC_REPETITION),
+    ("value_histogram", q_value_histogram, SQL_VALUE_HISTOGRAM),
+    ("eval_overlap", q_eval_overlap, SQL_EVAL_OVERLAP),
+    ("tfidf_top_terms", q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS),
+    ("hash_sample", q_hash_sample, SQL_HASH_SAMPLE),
+    ("pii_redact", q_pii_redact, SQL_PII_REDACT),
+    ("simhash", q_simhash, SQL_SIMHASH),
+    ("ngram_jaccard", q_ngram_jaccard, SQL_NGRAM_JACCARD),
+    ("lsh_jaccard_refine", q_lsh_jaccard_refine, SQL_LSH_JACCARD_REFINE),
+    ("cosine_topk", q_cosine_topk, SQL_COSINE_TOPK),
+    ("embedding_near_dup", q_embedding_near_dup, SQL_EMBEDDING_NEAR_DUP),
+    ("embedding_near_dup_lsh", q_embedding_near_dup_lsh, SQL_EMBEDDING_NEAR_DUP_LSH),
+    ("ann_lsh", q_ann_lsh, SQL_ANN_LSH),
+    ("ann_ivf", q_ann_ivf, SQL_ANN_IVF),
+    ("label_centroids", q_label_centroids, SQL_LABEL_CENTROIDS),
+    ("corpus_curation", q_corpus_curation, SQL_CORPUS_CURATION),
+    ("chunk_documents", q_chunk_documents, SQL_CHUNK_DOCUMENTS),
+    ("multimodal_features", q_multimodal_features, SQL_MULTIMODAL_FEATURES),
+    ("salted_join", q_salted_join, SQL_SALTED_JOIN),
+    ("usgs_pipeline", q_usgs_pipeline, SQL_USGS_PIPELINE),
 ]
 
-assert len(_GATE_FIRST) == 50, len(_GATE_FIRST)
-
-
-def _rotate(d: dict) -> dict:
-    head = {k: d[k] for k in _GATE_FIRST if k in d}
-    head.update((k, v) for k, v in d.items() if k not in head)
-    return head
-
-
-QUERIES = _rotate(QUERIES)
-ORACLE = _rotate(ORACLE)
+QUERIES, ORACLE = map(
+    rotate,
+    register(
+        CATALOG,
+        driver_queries_ext.CATALOG,
+        driver_queries_stream.CATALOG,
+        driver_queries_r6.CATALOG,
+        driver_queries_r7.CATALOG,
+    ),
+)

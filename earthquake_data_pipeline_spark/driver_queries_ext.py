@@ -15,15 +15,12 @@ expressions inside whole-stage codegen — no Python UDFs.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .qcommon import (
     _fanout,
     _table,
-    _utc,
     epoch_s,
     nonfinite_flag,
     reuse,
@@ -41,7 +38,6 @@ def q_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     event — frame membership decided by VALUE distance on epoch seconds,
     not row offsets, so ties and gaps behave correctly. One hash exchange
     + one sort, all functions on the shared frame."""
-    _utc(spark)
     ev = _table(spark, sf_dir, "events").filter(F.col("user_id") < 30)
     # epoch_s, not unix_timestamp (r13 ts-domain axis): floor seconds,
     # matching the oracle's exact epoch_us(date_trunc('second', ts))
@@ -95,7 +91,6 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-(flag,status), per-flag, and per-status subtotals (but NOT the
     grand total — a set rollup/cube can't express). One Expand + one
     HashAggregate pair, same single-shuffle plan as rollup at any scale."""
-    _utc(spark)
     li = _table(spark, sf_dir, "lineitem")
     li.createOrReplaceTempView("v_lineitem_gs")
     return spark.sql(
@@ -132,7 +127,6 @@ def q_rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark expands grouping sets inside a single shuffle (Expand + one
     HashAggregate pair) — no N-pass union of group-bys at 100 TB.
     """
-    _utc(spark)
     li = _table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
@@ -168,7 +162,6 @@ def q_cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (orderstatus, orderpriority): all 4 grouping sets, one
     shuffle (Expand multiplies rows map-side; partial agg collapses them
     before the exchange)."""
-    _utc(spark)
     orders = _table(spark, sf_dir, "orders")
     return (
         orders.cube("o_orderstatus", "o_orderpriority")
@@ -209,7 +202,6 @@ def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot order priority into columns per status. Values are DECLARED
     (no discovery pass over the data — at 100 TB an implicit pivot would
     scan once just to learn the column set)."""
-    _utc(spark)
     orders = _table(spark, sf_dir, "orders")
     piv = (
         orders.groupBy("o_orderstatus")
@@ -252,7 +244,6 @@ def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     One hash exchange on o_custkey + per-partition sort; all four
     functions share a single Window spec, so Spark plans ONE sort.
     """
-    _utc(spark)
     orders = _table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -323,7 +314,6 @@ def q_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     face is F.session_window (see streaming/); semantics are identical
     for completed sessions.
     """
-    _utc(spark)
     from .operators.analytics import session_ids_adaptive
 
     ev = (
@@ -409,7 +399,6 @@ def q_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """count(DISTINCT) alongside plain aggregates — Spark plans the
     two-phase Expand/agg rewrite; distinct cardinality per group never
     materializes the distinct set on one node."""
-    _utc(spark)
     orders = _table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_orderpriority")
@@ -452,7 +441,6 @@ def q_percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ratio 10.2). stddev is a plain moment aggregate. No stage
     anywhere buffers a flag's full row set.
     """
-    _utc(spark)
     from .operators.analytics import (
         _nsjoin,
         percentile_cont_bracket,
@@ -545,7 +533,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts). Orders are pre-deduped to max orderkey per (key, date) to
     make the pick deterministic.
     """
-    _utc(spark)
     ev = _table(spark, sf_dir, "events")
     orders = _table(spark, sf_dir, "orders")
     od = orders.groupBy("o_custkey", "o_orderdate").agg(
@@ -598,7 +585,6 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT / EXCEPT census: customers who placed orders under both
     'F' and 'O' status, only 'F', only 'O'. Set ops plan as aggregates +
     joins — no driver-side sets."""
-    _utc(spark)
     orders = _table(spark, sf_dir, "orders")
     f_cust = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey").distinct()
     o_cust = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey").distinct()
@@ -631,7 +617,6 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     a typed field from the raw props JSON string, aggregate on it — the
     idiomatic restatement of the reference's per-row dict walking
     (extract_historical.py:88-108)."""
-    _utc(spark)
     # _fanout removed (r18, guide §2.4): A/B 0.68 s -> 0.53 s at sf0.1
     # — one JSON field probe + a map-side-combined aggregate never
     # amortized the widening repartition.
@@ -699,7 +684,6 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle before the final count agg. Uniform intervals would skip the
     join entirely via arithmetic binning.
     """
-    _utc(spark)
     ev = _table(spark, sf_dir, "events")
     bands = spark.createDataFrame(VALUE_BANDS, ["band", "lo", "hi"])
     return (
@@ -745,7 +729,6 @@ def q_unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot/melt: three lineitem measures into (measure, value) rows,
     then one aggregate over the long form. Spark's unpivot is a zero-copy
     Expand (rows × measures map-side) — no shuffle until the agg."""
-    _utc(spark)
     li = _table(spark, sf_dir, "lineitem")
     long = li.unpivot(
         ids=["l_returnflag"],
@@ -791,7 +774,6 @@ def q_null_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     df.isnull().sum() before/after enrichment — as a first-class
     operator). One aggregate row expanded to long form: a single scan,
     counts for every column at once."""
-    _utc(spark)
     ev = _table(spark, sf_dir, "events")
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     wide = ev.agg(
@@ -831,7 +813,6 @@ def q_corr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bivariate statistics per group: Pearson correlation and sample
     covariance of quantity vs discount — single-pass streaming moments
     (partial+final, no sort, no second scan)."""
-    _utc(spark)
     li = _table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
@@ -867,7 +848,6 @@ def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     last(ignorenulls) over one sorted window. One exchange on user_id
     covers both the join and the fill at any scale.
     """
-    _utc(spark)
     ev = _table(spark, sf_dir, "events").filter(F.col("user_id") < 10)
     daily = ev.groupBy(
         "user_id", F.to_date("ts").alias("day")
@@ -922,7 +902,6 @@ def q_ranking_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full ranking-function family over one shared window: rank,
     dense_rank, percent_rank, cume_dist, ntile — one exchange + one sort
     serves all five."""
-    _utc(spark)
     orders = _table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 40)
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), "o_orderkey")
     return orders.select(
@@ -954,7 +933,6 @@ def q_string_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar string-function breadth on one scan: casing, trim, pad,
     substring, replace, split/element access, length, position,
     concatenation — all codegen expressions."""
-    _utc(spark)
     cust = _table(spark, sf_dir, "customer").filter(F.col("c_custkey") < 200)
     name = F.col("c_name")
     seg = F.col("c_mktsegment")
@@ -998,7 +976,6 @@ def q_datetime_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     add_months, date arithmetic, extraction (year/quarter/month/day/dow/
     doy), last_day, months_between — formatted as strings/ints so both
     engines collate identically."""
-    _utc(spark)
     orders = _table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 500)
     d = F.col("o_orderdate")
     return orders.select(
@@ -1050,7 +1027,6 @@ def q_array_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-evaluated split ×7 and array_distinct ×4 after CollapseProject
     — round-10 duplicate-eval scan; inline form measured −23% at
     sf0.1, bit-identical output)."""
-    _utc(spark)
     docs = _fanout(
         _table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 100)
@@ -1117,7 +1093,6 @@ def q_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer's own average price. Catalyst decorrelates the subquery
     into an aggregate + join — no per-row re-execution, unlike a naive
     interpreter."""
-    _utc(spark)
     _table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
     return spark.sql(
         """
@@ -1171,7 +1146,6 @@ def q_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank check into one aggregation, with the sketch values inlined as a
     literal lookup — the scan is column-pruned to 3 columns both times.
     """
-    _utc(spark)
     # No _fanout here (unlike the per-row-heavy queries): both jobs are
     # aggregations that shuffle anyway, and the repartition costs more
     # than the single-partition partial agg it parallelizes — measured
@@ -1271,7 +1245,6 @@ def q_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     until the final 100-row broadcast joins; payload bytes stay inside
     their partition end-to-end (the 100 TB property: media rides the
     row, no per-row side fetch)."""
-    _utc(spark)
     from pyspark.sql import types as T
 
     from .operators.multimodal import resize_images
@@ -1499,7 +1472,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shard (groupBy(shard).applyInPandas — one Arrow pass per shard);
     the oracle replays the same greedy fold with a recursive CTE. Output
     is one row per doc: its bin and the bin's running fill."""
-    _utc(spark)
     from .operators.packing import pack_documents, with_shard
     from .operators.text import tokens_of
 
@@ -1553,7 +1525,6 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(28,12) — so the SQL oracle replays the exact iteration.
     Output: final per-cluster centroid components + cluster sizes.
     """
-    _utc(spark)
     from .operators.clustering import _update_centroids, assign_clusters
     from .operators.similarity import finite_vectors
 
@@ -1681,7 +1652,6 @@ def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     not cluster quality — kmeans_clusters proves the iteration itself).
     Output: per cluster, member count and pruned-duplicate count.
     """
-    _utc(spark)
     from .operators.clustering import (
         _update_centroids,
         assign_clusters,
@@ -1830,7 +1800,6 @@ def q_mp4_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     their partition end-to-end (same 100 TB property as the image
     codecs); the container parse is O(bytes) with no codec work.
     """
-    _utc(spark)
     from pyspark.sql import types as T
 
     docs = (
@@ -1924,7 +1893,6 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin (write_zordered: range-partition by key + sorted files) is
     pinned by tests/test_scale.py::test_zorder_layout_bounds_both_dims.
     """
-    _utc(spark)
     from .operators.layout import zorder_key
     from .qcommon import nonfinite_flag
 
@@ -1997,7 +1965,6 @@ def q_scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     via (ts, event_id) row_number; epoch seconds keep the oracle exact;
     NULL valid_to surfaces as -1 so the hash never sees engine NaN.
     """
-    _utc(spark)
     from pyspark.sql import Window
 
     from .operators.merge import scd2_apply
@@ -2098,7 +2065,6 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum_cents for poisoned keys (the addend silently vanished from the
     decimal sum — no exact statement exists). min_v/max_v stay native.
     """
-    _utc(spark)
     from .operators.merge import incremental_agg_merge
     from .qcommon import nonfinite_flag
 
@@ -2152,7 +2118,6 @@ def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     then decimal-sum, so the oracle (position self-join + the same
     count arithmetic) reproduces the score bit-for-bit.
     """
-    _utc(spark)
     from .operators.text import bigram_lm_scores
 
     # _fanout removed (r18, guide §2.4): A/B 1.47 s -> 0.83 s at sf0.1
@@ -2207,7 +2172,6 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is deterministic even though raw counter values are not.
     Output: the truly-heavy keys with exact counts + guarantee booleans.
     """
-    _utc(spark)
     from .operators.sketches import heavy_hitters_sketch
 
     k = 31
@@ -2264,7 +2228,6 @@ def q_expectations_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     accepted_values, and a deliberately-violated range check so the
     report proves exact violation COUNTS, not just pass booleans.
     """
-    _utc(spark)
     from .operators.quality import expectation_report
 
     ev = _table(spark, sf_dir, "events")
@@ -2319,7 +2282,6 @@ def q_split_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly replayable by the oracle's md5 arithmetic. Output: each
     split's document count and doc_id checksum (proves the ASSIGNMENT,
     not just the sizes)."""
-    _utc(spark)
     from .operators.sampling import assign_splits
 
     docs = _table(spark, sf_dir, "documents").select("doc_id")
@@ -2356,78 +2318,40 @@ FROM labeled GROUP BY split ORDER BY split
 """
 
 
-QUERIES_EXT: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "range_frame": q_range_frame,
-    "grouping_sets": q_grouping_sets,
-    "rollup_agg": q_rollup_agg,
-    "cube_agg": q_cube_agg,
-    "pivot_status": q_pivot_status,
-    "window_running": q_window_running,
-    "sessionization": q_sessionization,
-    "distinct_agg": q_distinct_agg,
-    "percentile_stats": q_percentile_stats,
-    "asof_join": q_asof_join,
-    "set_ops": q_set_ops,
-    "json_extract": q_json_extract,
-    "range_join": q_range_join,
-    "unpivot_measures": q_unpivot_measures,
-    "null_census": q_null_census,
-    "corr_stats": q_corr_stats,
-    "gap_fill": q_gap_fill,
-    "ranking_suite": q_ranking_suite,
-    "string_suite": q_string_suite,
-    "datetime_suite": q_datetime_suite,
-    "array_suite": q_array_suite,
-    "correlated_subquery": q_correlated_subquery,
-    "approx_stats": q_approx_stats,
-    "codec_roundtrip": q_codec_roundtrip,
-    "pack_sequences": q_pack_sequences,
-    "kmeans_clusters": q_kmeans_clusters,
-    "semdedup_prune": q_semdedup_prune,
-    "mp4_probe": q_mp4_probe,
-    "zorder_layout": q_zorder_layout,
-    "scd2_snapshot": q_scd2_snapshot,
-    "incremental_agg": q_incremental_agg,
-    "bigram_lm_score": q_bigram_lm_score,
-    "heavy_hitters": q_heavy_hitters,
-    "expectations_report": q_expectations_report,
-    "split_assignment": q_split_assignment,
-}
-
-ORACLE_EXT: dict[str, str] = {
-    "range_frame": SQL_RANGE_FRAME,
-    "grouping_sets": SQL_GROUPING_SETS,
-    "rollup_agg": SQL_ROLLUP_AGG,
-    "cube_agg": SQL_CUBE_AGG,
-    "pivot_status": SQL_PIVOT_STATUS,
-    "window_running": SQL_WINDOW_RUNNING,
-    "sessionization": SQL_SESSIONIZATION,
-    "distinct_agg": SQL_DISTINCT_AGG,
-    "percentile_stats": SQL_PERCENTILE_STATS,
-    "asof_join": SQL_ASOF_JOIN,
-    "set_ops": SQL_SET_OPS,
-    "json_extract": SQL_JSON_EXTRACT,
-    "range_join": SQL_RANGE_JOIN,
-    "unpivot_measures": SQL_UNPIVOT_MEASURES,
-    "null_census": SQL_NULL_CENSUS,
-    "corr_stats": SQL_CORR_STATS,
-    "gap_fill": SQL_GAP_FILL,
-    "ranking_suite": SQL_RANKING_SUITE,
-    "string_suite": SQL_STRING_SUITE,
-    "datetime_suite": SQL_DATETIME_SUITE,
-    "array_suite": SQL_ARRAY_SUITE,
-    "correlated_subquery": SQL_CORRELATED_SUBQUERY,
-    "approx_stats": SQL_APPROX_STATS,
-    "codec_roundtrip": SQL_CODEC_ROUNDTRIP,
-    "pack_sequences": SQL_PACK_SEQUENCES,
-    "kmeans_clusters": SQL_KMEANS_CLUSTERS,
-    "semdedup_prune": SQL_SEMDEDUP_PRUNE,
-    "mp4_probe": SQL_MP4_PROBE,
-    "zorder_layout": SQL_ZORDER_LAYOUT,
-    "scd2_snapshot": SQL_SCD2_SNAPSHOT,
-    "incremental_agg": SQL_INCREMENTAL_AGG,
-    "bigram_lm_score": SQL_BIGRAM_LM_SCORE,
-    "heavy_hitters": SQL_HEAVY_HITTERS,
-    "expectations_report": SQL_EXPECTATIONS_REPORT,
-    "split_assignment": SQL_SPLIT_ASSIGNMENT,
-}
+CATALOG = [
+    ("range_frame", q_range_frame, SQL_RANGE_FRAME),
+    ("grouping_sets", q_grouping_sets, SQL_GROUPING_SETS),
+    ("rollup_agg", q_rollup_agg, SQL_ROLLUP_AGG),
+    ("cube_agg", q_cube_agg, SQL_CUBE_AGG),
+    ("pivot_status", q_pivot_status, SQL_PIVOT_STATUS),
+    ("window_running", q_window_running, SQL_WINDOW_RUNNING),
+    ("sessionization", q_sessionization, SQL_SESSIONIZATION),
+    ("distinct_agg", q_distinct_agg, SQL_DISTINCT_AGG),
+    ("percentile_stats", q_percentile_stats, SQL_PERCENTILE_STATS),
+    ("asof_join", q_asof_join, SQL_ASOF_JOIN),
+    ("set_ops", q_set_ops, SQL_SET_OPS),
+    ("json_extract", q_json_extract, SQL_JSON_EXTRACT),
+    ("range_join", q_range_join, SQL_RANGE_JOIN),
+    ("unpivot_measures", q_unpivot_measures, SQL_UNPIVOT_MEASURES),
+    ("null_census", q_null_census, SQL_NULL_CENSUS),
+    ("corr_stats", q_corr_stats, SQL_CORR_STATS),
+    ("gap_fill", q_gap_fill, SQL_GAP_FILL),
+    ("ranking_suite", q_ranking_suite, SQL_RANKING_SUITE),
+    ("string_suite", q_string_suite, SQL_STRING_SUITE),
+    ("datetime_suite", q_datetime_suite, SQL_DATETIME_SUITE),
+    ("array_suite", q_array_suite, SQL_ARRAY_SUITE),
+    ("correlated_subquery", q_correlated_subquery, SQL_CORRELATED_SUBQUERY),
+    ("approx_stats", q_approx_stats, SQL_APPROX_STATS),
+    ("codec_roundtrip", q_codec_roundtrip, SQL_CODEC_ROUNDTRIP),
+    ("pack_sequences", q_pack_sequences, SQL_PACK_SEQUENCES),
+    ("kmeans_clusters", q_kmeans_clusters, SQL_KMEANS_CLUSTERS),
+    ("semdedup_prune", q_semdedup_prune, SQL_SEMDEDUP_PRUNE),
+    ("mp4_probe", q_mp4_probe, SQL_MP4_PROBE),
+    ("zorder_layout", q_zorder_layout, SQL_ZORDER_LAYOUT),
+    ("scd2_snapshot", q_scd2_snapshot, SQL_SCD2_SNAPSHOT),
+    ("incremental_agg", q_incremental_agg, SQL_INCREMENTAL_AGG),
+    ("bigram_lm_score", q_bigram_lm_score, SQL_BIGRAM_LM_SCORE),
+    ("heavy_hitters", q_heavy_hitters, SQL_HEAVY_HITTERS),
+    ("expectations_report", q_expectations_report, SQL_EXPECTATIONS_REPORT),
+    ("split_assignment", q_split_assignment, SQL_SPLIT_ASSIGNMENT),
+]

@@ -3,8 +3,9 @@ retention, funnels, outlier census), score-driven curation (deciles,
 nucleus selection), winnowing fingerprints, URL canonicalization, and
 sketched distinct counts.
 
-Same contract as driver_queries / driver_queries_ext: every query pins
-UTC, reads via qcommon._table, aliases every output column identically
+Same contract as driver_queries / driver_queries_ext: every query runs
+under the UTC pin of its catalog registration (catalog.py), reads via
+qcommon._table, aliases every output column identically
 to its DuckDB oracle, and ends in a total ORDER BY. Reference parity
 notes: the analytics trio generalizes the reference's analytics-model
 family (dbt_files/models/analytics/*.sql — group-by rollups over one
@@ -15,8 +16,6 @@ surface (BASELINE.json) alongside the round-1..5 dedup/sampling stack.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,7 +25,6 @@ from .qcommon import (
     _fanout,
     _minhash_sql,
     _table,
-    _utc,
 )
 
 
@@ -38,7 +36,6 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, one user-keyed window, one (cohort, offset) aggregate —
     integer day indices keep the calendar math exactly replayable.
     """
-    _utc(spark)
     from .operators.analytics import cohort_retention
 
     ev = _table(spark, sf_dir, "events").select("user_id", "ts")
@@ -76,7 +73,6 @@ def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     The bounded ``within_s`` variant (``funnel_windowed``) stays on
     the window face by the documented not-bucket-summarizable proof.
     """
-    _utc(spark)
     from .operators.analytics import funnel_steps_adaptive
 
     ev = _table(spark, sf_dir, "events")
@@ -119,7 +115,6 @@ def q_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     entirely, so the boolean replays bit-for-bit in any engine. Stats
     pass is map-side combined to k rows; the flag pass broadcasts them.
     """
-    _utc(spark)
     from .operators.analytics import zscore_outlier_stats
 
     ev = _table(spark, sf_dir, "events").select("event_type", "value")
@@ -161,7 +156,6 @@ def q_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     stratum instead of one AQE-opaque whole-stratum sort task; the
     ntile window form stays as the test-pinned parity face.
     """
-    _utc(spark)
     from .operators.curation import quality_decile_stats_by_counts
 
     docs = _table(spark, sf_dir, "documents").select("lang", "n_chars")
@@ -188,7 +182,6 @@ def q_top_p_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     under 80% of the stratum total, boundary decided in exact integers.
     One window exchange per stratum + a k-row audit aggregate.
     """
-    _utc(spark)
     from .operators.curation import top_p_select
 
     docs = _table(spark, sf_dir, "documents").select("lang", "n_chars", "doc_id")
@@ -224,7 +217,6 @@ def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     size and an order-free BIGINT checksum so set equality is
     hash-checkable.
     """
-    _utc(spark)
     from .operators.fingerprint import winnow_fingerprints
 
     docs = _fanout(_table(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -266,7 +258,6 @@ def q_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     The corpus has no URLs, so they are seeded deterministically —
     the url_domains pattern.
     """
-    _utc(spark)
     from .operators.text import canonical_url
 
     # _fanout removed (r18, guide §2.4): A/B 0.74 s -> 0.38 s at sf0.1
@@ -344,7 +335,6 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     acceptable; the exact twin here is what makes the gate proof
     possible.
     """
-    _utc(spark)
     ev = _table(spark, sf_dir, "events").select("event_type", "user_id")
     agg = ev.groupBy("event_type").agg(
         F.count_distinct("user_id").alias("n_exact"),
@@ -378,7 +368,6 @@ def q_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints are dropped by the max_df=10 document-frequency guard;
     min_shared=4 suppresses single-hash coincidences.
     """
-    _utc(spark)
     from .operators.fingerprint import fingerprint_match_pairs
 
     docs = _fanout(_table(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -466,7 +455,6 @@ def q_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     one doc is much larger), exact set arithmetic only on the bounded
     candidate set, never all-pairs.
     """
-    _utc(spark)
     from .operators.fingerprint import fingerprint_match_pairs
     from .operators.fuzzy_dedup import ngram_containment_pairs
 
@@ -512,7 +500,6 @@ def q_approx_quality_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     never the engine-specific boundary values — the heavy_hitters /
     approx_distinct guarantee-oracle pattern.
     """
-    _utc(spark)
     from .operators.curation import approx_bins_audit
 
     docs = _table(spark, sf_dir, "documents").select("lang", "n_chars")
@@ -534,7 +521,6 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     next-fit-decreasing bin packing — one exchange, two windows, all
     integer arithmetic — summarized per (partition, bin).
     """
-    _utc(spark)
     from .operators.layout import compaction_plan
 
     docs = _table(spark, sf_dir, "documents").select("source", "doc_id", "n_chars")
@@ -588,7 +574,6 @@ def q_cms_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ESTIMATE ITSELF replays bit-identically in the SQL oracle — this is
     an exact-value row, not a guarantee-only row.
     """
-    _utc(spark)
     from .operators.sketches import cms_point_estimates, cms_sketch
 
     ev = _table(spark, sf_dir, "events").select("user_id")
@@ -661,7 +646,6 @@ def q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted exactly — plus a checksum of the true semi-join. The filter
     is deterministic md5, so every number replays exactly in SQL.
     """
-    _utc(spark)
     from .operators.scale import bloom_filter_build, bloom_might_contain
 
     dim = (
@@ -752,7 +736,6 @@ def q_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor; no order-dependent normalizing float sum) — the audit row
     set replays bit-identically in DuckDB.
     """
-    _utc(spark)
     from .operators.sampling import mixture_resample
 
     docs = _table(spark, sf_dir, "documents").select("source", "doc_id")
@@ -804,7 +787,6 @@ def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunking explode, one hash-keyed frequency shuffle, one join of the
     (tiny) flagged set back to the stream.
     """
-    _utc(spark)
     from .operators.text import boilerplate_flags
 
     # _fanout removed (r18, guide §2.4): A/B 1.21 s -> 0.78 s at sf0.1;
@@ -855,45 +837,6 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-QUERIES_R6: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "cohort_retention": q_cohort_retention,
-    "funnel_steps": q_funnel_steps,
-    "zscore_outliers": q_zscore_outliers,
-    "quality_deciles": q_quality_deciles,
-    "top_p_select": q_top_p_select,
-    "winnow_fingerprint": q_winnow_fingerprint,
-    "url_canonical": q_url_canonical,
-    "approx_distinct": q_approx_distinct,
-    "fingerprint_dedup": q_fingerprint_dedup,
-    "ngram_containment": q_ngram_containment,
-    "approx_quality_bins": q_approx_quality_bins,
-    "compaction_plan": q_compaction_plan,
-    "cms_frequency": q_cms_frequency,
-    "bloom_prune": q_bloom_prune,
-    "domain_mixture": q_domain_mixture,
-    "boilerplate_strip": q_boilerplate_strip,
-}
-
-ORACLE_R6: dict[str, str] = {
-    "cohort_retention": SQL_COHORT_RETENTION,
-    "funnel_steps": SQL_FUNNEL_STEPS,
-    "zscore_outliers": SQL_ZSCORE_OUTLIERS,
-    "quality_deciles": SQL_QUALITY_DECILES,
-    "top_p_select": SQL_TOP_P_SELECT,
-    "winnow_fingerprint": SQL_WINNOW_FINGERPRINT,
-    "url_canonical": SQL_URL_CANONICAL,
-    "approx_distinct": SQL_APPROX_DISTINCT,
-    "fingerprint_dedup": SQL_FINGERPRINT_DEDUP,
-    "ngram_containment": SQL_NGRAM_CONTAINMENT,
-    "approx_quality_bins": SQL_APPROX_QUALITY_BINS,
-    "compaction_plan": SQL_COMPACTION_PLAN,
-    "cms_frequency": SQL_CMS_FREQUENCY,
-    "bloom_prune": SQL_BLOOM_PRUNE,
-    "domain_mixture": SQL_DOMAIN_MIXTURE,
-    "boilerplate_strip": SQL_BOILERPLATE_STRIP,
-}
-
-
 # ---------------------------------------------------------------- batch 4
 
 
@@ -912,7 +855,6 @@ def q_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     claim. Spark runs the scale plan (token-df prefix equi-join);
     DuckDB runs the quadratic audit the scale plan replaces.
     """
-    _utc(spark)
     from .operators.fuzzy_dedup import prefix_filter_join
 
     docs = _fanout(_table(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -948,10 +890,6 @@ ORDER BY id_a, id_b
 """
 
 
-QUERIES_R6["prefix_filter_join"] = q_prefix_filter_join
-ORACLE_R6["prefix_filter_join"] = SQL_PREFIX_FILTER_JOIN
-
-
 def q_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping-interval coalescing (operators/analytics.py::
     merge_intervals): each event opens a 12 h activity window per user;
@@ -975,7 +913,6 @@ def q_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     77). Both faces are oracle-equal and parity-pinned bit-identical,
     so dispatch can change only the plan, never the rows.
     """
-    _utc(spark)
     from .operators.analytics import merge_intervals_adaptive
 
     ev = _table(spark, sf_dir, "events").select("user_id", "ts")
@@ -1010,9 +947,6 @@ SELECT k AS user_id, CAST(island AS INT) AS island,
 FROM g GROUP BY 1, 2 ORDER BY 1, 2
 """
 
-QUERIES_R6["interval_merge"] = q_interval_merge
-ORACLE_R6["interval_merge"] = SQL_INTERVAL_MERGE
-
 
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC snapshot diff (operators/merge.py::snapshot_diff): per-user
@@ -1022,7 +956,6 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshots. The early T1 cut leaves some users unseen (-> 'added'
     rows), so every classification branch is populated.
     """
-    _utc(spark)
     from .operators.merge import snapshot_diff
 
     ev = _table(spark, sf_dir, "events").select(
@@ -1053,9 +986,6 @@ FROM o FULL OUTER JOIN n USING (user_id)
 ORDER BY user_id
 """
 
-QUERIES_R6["snapshot_diff"] = q_snapshot_diff
-ORACLE_R6["snapshot_diff"] = SQL_SNAPSHOT_DIFF
-
 
 def q_length_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-bucketed batch assignment (operators/packing.py::
@@ -1064,7 +994,6 @@ def q_length_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell, per-batch padding-waste audit. The (bucket, shard) cell
     design is what removes the per-bucket single-task sort at scale.
     """
-    _utc(spark)
     from .operators.packing import length_batches
 
     docs = _table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1103,9 +1032,6 @@ SELECT bucket_len, CAST(shard AS INT) AS shard, batch,
 FROM dealt GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
 """
 
-QUERIES_R6["length_batching"] = q_length_batching
-ORACLE_R6["length_batching"] = SQL_LENGTH_BATCHING
-
 
 def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collocation mining (operators/collocations.py::pmi_collocations):
@@ -1116,7 +1042,6 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     the selection populated at the sf0.01 gate scale (min_count=50
     returned zero rows there — a zero-row hash match proves nothing).
     """
-    _utc(spark)
     from .operators.collocations import pmi_collocations
 
     # _fanout removed (r18, guide §2.4): A/B 1.17 s -> 0.62 s at sf0.1
@@ -1157,9 +1082,6 @@ CROSS JOIN totals
 ORDER BY c_xy DESC, bigram
 """
 
-QUERIES_R6["pmi_collocations"] = q_pmi_collocations
-ORACLE_R6["pmi_collocations"] = SQL_PMI_COLLOCATIONS
-
 
 def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic multi-epoch shuffle (operators/shuffling.py::
@@ -1167,7 +1089,6 @@ def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     the position-sensitive per-cell checksum makes the oracle verify
     the PERMUTATION, not just membership.
     """
-    _utc(spark)
     from .operators.shuffling import epoch_shuffle
 
     docs = _table(spark, sf_dir, "documents").select("doc_id")
@@ -1194,9 +1115,6 @@ SELECT CAST(epoch AS INT) AS epoch, CAST(shard AS INT) AS shard,
 FROM p GROUP BY 1, 2 ORDER BY 1, 2
 """
 
-QUERIES_R6["epoch_shuffle"] = q_epoch_shuffle
-ORACLE_R6["epoch_shuffle"] = SQL_EPOCH_SHUFFLE
-
 
 _PROFILE_COLS = {
     "o_orderkey": "bigint",
@@ -1214,7 +1132,6 @@ def q_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic riding a single map-side-combined aggregate. Doubles
     render via decimal(18,2) so min/max strings are engine-neutral.
     """
-    _utc(spark)
     from .operators.profiling import column_profile
 
     # _fanout: the small-file orders scan is ONE partition locally, which
@@ -1256,7 +1173,6 @@ def q_histogram_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal(38,0) (round-10 overflow audit: c·n is ~10^24 at 10^12
     rows), emitted as DOUBLE on both engines.
     """
-    _utc(spark)
     from .operators.profiling import histogram_drift
 
     ev = _table(spark, sf_dir, "events").select("event_type", "ts", "value")
@@ -1299,11 +1215,6 @@ SELECT k AS event_type,
 FROM g2 GROUP BY 1 ORDER BY 1
 """
 
-QUERIES_R6["column_profile"] = q_column_profile
-ORACLE_R6["column_profile"] = SQL_COLUMN_PROFILE
-QUERIES_R6["histogram_drift"] = q_histogram_drift
-ORACLE_R6["histogram_drift"] = SQL_HISTOGRAM_DRIFT
-
 
 def q_exact_substring_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicated-substring detection (operators/fingerprint.py::
@@ -1314,7 +1225,6 @@ def q_exact_substring_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     k + max_run - 1 chars. The max_df stop-gram guard bounds template
     boilerplate to C(10,2) pairs per gram.
     """
-    _utc(spark)
     from .operators.fingerprint import exact_substring_pairs
 
     docs = _fanout(_table(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -1363,9 +1273,6 @@ HAVING sum(run_len) >= 3
 ORDER BY id_a, id_b
 """
 
-QUERIES_R6["exact_substring_dup"] = q_exact_substring_dup
-ORACLE_R6["exact_substring_dup"] = SQL_EXACT_SUBSTRING_DUP
-
 
 def q_join_explosion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-join explosion audit (operators/profiling.py::
@@ -1375,7 +1282,6 @@ def q_join_explosion(spark: SparkSession, sf_dir: str) -> DataFrame:
     total. The query a 100 TB engine runs before deciding salt vs
     broadcast vs pre-aggregate.
     """
-    _utc(spark)
     from .operators.profiling import join_explosion_audit
 
     li = _table(spark, sf_dir, "lineitem").select("l_partkey")
@@ -1399,9 +1305,6 @@ ORDER BY out_rows DESC, l_partkey
 LIMIT 10
 """
 
-QUERIES_R6["join_explosion"] = q_join_explosion
-ORACLE_R6["join_explosion"] = SQL_JOIN_EXPLOSION
-
 
 def q_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-window funnel (operators/analytics.py::funnel_steps with
@@ -1410,7 +1313,6 @@ def q_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant of funnel_steps, same single-exchange min(CASE) chain with
     an integer epoch bound folded into each CASE.
     """
-    _utc(spark)
     from .operators.analytics import funnel_steps
 
     ev = _table(spark, sf_dir, "events")
@@ -1451,9 +1353,6 @@ UNION ALL SELECT 3, 'purchase', c2 FROM agg
 ORDER BY step_idx
 """
 
-QUERIES_R6["funnel_windowed"] = q_funnel_windowed
-ORACLE_R6["funnel_windowed"] = SQL_FUNNEL_WINDOWED
-
 
 def q_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware dedup keep list (operators/curation.py::
@@ -1466,7 +1365,6 @@ def q_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     in components — measured 121 s for a policy demo; LSH banding
     keeps the graph dedup-shaped.)
     """
-    _utc(spark)
     from .operators.curation import dedup_keep_list
     from .operators.fuzzy_dedup import minhash_lsh_pairs
 
@@ -1511,9 +1409,6 @@ SELECT doc_id, component_id, quality,
 FROM ranked ORDER BY doc_id
 """
 
-QUERIES_R6["dedup_keep_list"] = q_dedup_keep_list
-ORACLE_R6["dedup_keep_list"] = SQL_DEDUP_KEEP_LIST
-
 
 def q_event_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Telemetry debounce (operators/analytics.py::event_debounce):
@@ -1527,7 +1422,6 @@ def q_event_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     item 5) — the probe groups on the COMPOSITE (user, type) window
     key, uniform corpora take the window face, faces parity-pinned.
     """
-    _utc(spark)
     from .operators.analytics import event_debounce_adaptive
 
     ev = _table(spark, sf_dir, "events").select(
@@ -1560,7 +1454,6 @@ def q_cumulative_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressed as a running sum of first-seen counts (bounded state),
     never a cumulative-distinct.
     """
-    _utc(spark)
     from .operators.analytics import cumulative_reach
 
     ev = _table(spark, sf_dir, "events").select("user_id", "ts")
@@ -1604,7 +1497,6 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     dispatch (family-wide rollout of VERDICT r14 item 5) — uniform
     corpora take the window face, faces parity-pinned bit-identical.
     """
-    _utc(spark)
     from .operators.analytics import event_transitions_adaptive
 
     ev = _table(spark, sf_dir, "events").select(
@@ -1639,7 +1531,6 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric desc, user id — so tiles are engine-independent), counted
     per segment with exact-cents average monetary.
     """
-    _utc(spark)
     from .operators.analytics import rfm_segments
 
     ev = _table(spark, sf_dir, "events").select(
@@ -1689,22 +1580,12 @@ SELECT CAST(r_tile AS INT) AS r_tile, CAST(f_tile AS INT) AS f_tile,
 FROM scored GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
 """
 
-QUERIES_R6["event_debounce"] = q_event_debounce
-ORACLE_R6["event_debounce"] = SQL_EVENT_DEBOUNCE
-QUERIES_R6["cumulative_reach"] = q_cumulative_reach
-ORACLE_R6["cumulative_reach"] = SQL_CUMULATIVE_REACH
-QUERIES_R6["event_transitions"] = q_event_transitions
-ORACLE_R6["event_transitions"] = SQL_EVENT_TRANSITIONS
-QUERIES_R6["rfm_segments"] = q_rfm_segments
-ORACLE_R6["rfm_segments"] = SQL_RFM_SEGMENTS
-
 
 def q_char_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simpson collision-index text quality (operators/quality.py::
     char_diversity): the integer-exact stand-in for character entropy
     — collisions = sum c_i*(c_i-1) over characters, diversity in ppm.
     """
-    _utc(spark)
     from .operators.quality import char_diversity
 
     docs = _fanout(_table(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -1740,7 +1621,6 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key row sort; mad_outliers stays as the test-pinned parity
     face. NULL values excluded on both engines (ADVICE r11 alignment).
     """
-    _utc(spark)
     from .operators.analytics import mad_outliers_by_counts
 
     ev = _table(spark, sf_dir, "events").select(
@@ -1809,7 +1689,6 @@ def q_hourly_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type hour-of-day concentration — peak hour + integer ppm
     concentration index (0 = uniform, 23e6 = single-hour spike).
     """
-    _utc(spark)
     from .operators.analytics import hourly_profile
 
     ev = _table(spark, sf_dir, "events").select("event_type", "ts")
@@ -1843,7 +1722,6 @@ def q_fact_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     of l_extendedprice*(1-l_discount) per order, mismatches bucketed
     by signed cent difference — the warehouse audit query.
     """
-    _utc(spark)
     from .operators.quality import fact_reconciliation
 
     return fact_reconciliation(
@@ -1879,11 +1757,42 @@ SELECT bucket, count(*) AS n_orders,
 FROM b GROUP BY 1 ORDER BY 1
 """
 
-QUERIES_R6["char_diversity"] = q_char_diversity
-ORACLE_R6["char_diversity"] = SQL_CHAR_DIVERSITY
-QUERIES_R6["mad_outliers"] = q_mad_outliers
-ORACLE_R6["mad_outliers"] = SQL_MAD_OUTLIERS
-QUERIES_R6["hourly_profile"] = q_hourly_profile
-ORACLE_R6["hourly_profile"] = SQL_HOURLY_PROFILE
-QUERIES_R6["fact_reconciliation"] = q_fact_reconciliation
-ORACLE_R6["fact_reconciliation"] = SQL_FACT_RECONCILIATION
+
+CATALOG = [
+    ("cohort_retention", q_cohort_retention, SQL_COHORT_RETENTION),
+    ("funnel_steps", q_funnel_steps, SQL_FUNNEL_STEPS),
+    ("zscore_outliers", q_zscore_outliers, SQL_ZSCORE_OUTLIERS),
+    ("quality_deciles", q_quality_deciles, SQL_QUALITY_DECILES),
+    ("top_p_select", q_top_p_select, SQL_TOP_P_SELECT),
+    ("winnow_fingerprint", q_winnow_fingerprint, SQL_WINNOW_FINGERPRINT),
+    ("url_canonical", q_url_canonical, SQL_URL_CANONICAL),
+    ("approx_distinct", q_approx_distinct, SQL_APPROX_DISTINCT),
+    ("fingerprint_dedup", q_fingerprint_dedup, SQL_FINGERPRINT_DEDUP),
+    ("ngram_containment", q_ngram_containment, SQL_NGRAM_CONTAINMENT),
+    ("approx_quality_bins", q_approx_quality_bins, SQL_APPROX_QUALITY_BINS),
+    ("compaction_plan", q_compaction_plan, SQL_COMPACTION_PLAN),
+    ("cms_frequency", q_cms_frequency, SQL_CMS_FREQUENCY),
+    ("bloom_prune", q_bloom_prune, SQL_BLOOM_PRUNE),
+    ("domain_mixture", q_domain_mixture, SQL_DOMAIN_MIXTURE),
+    ("boilerplate_strip", q_boilerplate_strip, SQL_BOILERPLATE_STRIP),
+    ("prefix_filter_join", q_prefix_filter_join, SQL_PREFIX_FILTER_JOIN),
+    ("interval_merge", q_interval_merge, SQL_INTERVAL_MERGE),
+    ("snapshot_diff", q_snapshot_diff, SQL_SNAPSHOT_DIFF),
+    ("length_batching", q_length_batching, SQL_LENGTH_BATCHING),
+    ("pmi_collocations", q_pmi_collocations, SQL_PMI_COLLOCATIONS),
+    ("epoch_shuffle", q_epoch_shuffle, SQL_EPOCH_SHUFFLE),
+    ("column_profile", q_column_profile, SQL_COLUMN_PROFILE),
+    ("histogram_drift", q_histogram_drift, SQL_HISTOGRAM_DRIFT),
+    ("exact_substring_dup", q_exact_substring_dup, SQL_EXACT_SUBSTRING_DUP),
+    ("join_explosion", q_join_explosion, SQL_JOIN_EXPLOSION),
+    ("funnel_windowed", q_funnel_windowed, SQL_FUNNEL_WINDOWED),
+    ("dedup_keep_list", q_dedup_keep_list, SQL_DEDUP_KEEP_LIST),
+    ("event_debounce", q_event_debounce, SQL_EVENT_DEBOUNCE),
+    ("cumulative_reach", q_cumulative_reach, SQL_CUMULATIVE_REACH),
+    ("event_transitions", q_event_transitions, SQL_EVENT_TRANSITIONS),
+    ("rfm_segments", q_rfm_segments, SQL_RFM_SEGMENTS),
+    ("char_diversity", q_char_diversity, SQL_CHAR_DIVERSITY),
+    ("mad_outliers", q_mad_outliers, SQL_MAD_OUTLIERS),
+    ("hourly_profile", q_hourly_profile, SQL_HOURLY_PROFILE),
+    ("fact_reconciliation", q_fact_reconciliation, SQL_FACT_RECONCILIATION),
+]

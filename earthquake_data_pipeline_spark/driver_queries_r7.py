@@ -2,8 +2,8 @@
 index construction, zone-map data-skipping audit, and weight-
 proportional sampling.
 
-Same contract as the earlier driver_queries modules: pin UTC, read via
-qcommon._table, alias every output column identically to the DuckDB
+Same contract as the earlier driver_queries modules: UTC pinned by the
+catalog registration (catalog.py), read via qcommon._table, alias every output column identically to the DuckDB
 oracle, end in a total ORDER BY. Reference parity notes live on the
 operator docstrings (operators/analytics.py::rate_limit_flags,
 operators/indexing.py, operators/layout.py::zone_maps/skip_audit,
@@ -11,8 +11,6 @@ operators/sampling.py::weighted_bernoulli).
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,14 +20,10 @@ from .qcommon import (
     _fanout,
     _minhash_sql,
     _table,
-    _utc,
     epoch_s,
     reuse,
     round6x,
 )
-
-QUERIES_R7: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE_R7: dict[str, str] = {}
 
 
 def q_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -39,7 +33,6 @@ def q_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the stateless discipline (count includes throttled events); the
     sequential admission-feedback face lives in streaming/ratelimit.py.
     """
-    _utc(spark)
     from .operators.analytics import rate_limit_flags
 
     ev = _table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
@@ -73,7 +66,6 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     a deterministic, engine-neutral index image. Two keyed aggregates
     (term,doc) then (term); the explode is the only data-sized stage.
     """
-    _utc(spark)
     from .operators.indexing import inverted_index
 
     docs = _table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -127,7 +119,6 @@ def q_zone_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     argument for clustered layouts at 100 TB. Stats tables are
     file-count-sized; only rows_matched touches the data again.
     """
-    _utc(spark)
     from .operators.layout import skip_audit, zone_maps
 
     li = _table(spark, sf_dir, "lineitem").select(
@@ -256,7 +247,6 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     admitted-id checksum so every per-row admission decision is pinned
     by the hash compare. Map-only then one small aggregate.
     """
-    _utc(spark)
     from .operators.sampling import weighted_bernoulli
 
     docs = _table(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -312,16 +302,6 @@ FROM a GROUP BY 1 ORDER BY 1
 """
 
 
-QUERIES_R7["rate_limit"] = q_rate_limit
-ORACLE_R7["rate_limit"] = SQL_RATE_LIMIT
-QUERIES_R7["inverted_index"] = q_inverted_index
-ORACLE_R7["inverted_index"] = SQL_INVERTED_INDEX
-QUERIES_R7["zone_skipping"] = q_zone_skipping
-ORACLE_R7["zone_skipping"] = SQL_ZONE_SKIPPING
-QUERIES_R7["weighted_sample"] = q_weighted_sample
-ORACLE_R7["weighted_sample"] = SQL_WEIGHTED_SAMPLE
-
-
 def q_token_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-bucket admission (operators/admission.py): burst 2, refill
     1 token / 12 h, integer 1/43200-token units. The admission-feedback
@@ -329,7 +309,6 @@ def q_token_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash shuffle — and the oracle replays it exactly with a recursive
     CTE over the same (ts, id) total order.
     """
-    _utc(spark)
     from .operators.admission import token_bucket_admit
 
     ev = _table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
@@ -379,7 +358,6 @@ def q_cms_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceeds int64 outright, and the old long accumulation wrapped
     silently in an ANSI-off driver session (see cms_join_size).
     """
-    _utc(spark)
     from .operators.sketches import cms_join_size, cms_sketch
 
     day_o = F.datediff(
@@ -480,7 +458,6 @@ def q_trend_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     int/int divisions in float. One key-partitioned window + one
     aggregate on the same key.
     """
-    _utc(spark)
     from .operators.analytics import trend_fit
 
     ev = _table(spark, sf_dir, "events").select("user_id", "ts", "value")
@@ -547,7 +524,6 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     transcendental (verified engine-identical on this corpus at both
     gate scales).
     """
-    _utc(spark)
     from .operators.indexing import bm25_scores
 
     docs = _table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -600,23 +576,12 @@ FROM agg ORDER BY score DESC, doc_id LIMIT 50
 """
 
 
-QUERIES_R7["token_bucket"] = q_token_bucket
-ORACLE_R7["token_bucket"] = SQL_TOKEN_BUCKET
-QUERIES_R7["cms_join_size"] = q_cms_join_size
-ORACLE_R7["cms_join_size"] = SQL_CMS_JOIN_SIZE
-QUERIES_R7["trend_fit"] = q_trend_fit
-ORACLE_R7["trend_fit"] = SQL_TREND_FIT
-QUERIES_R7["bm25_topk"] = q_bm25_topk
-ORACLE_R7["bm25_topk"] = SQL_BM25_TOPK
-
-
 def q_pagerank_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer-ppm PageRank (operators/graph.py::pagerank_ppm) over the
     corpus token-bigram graph: nodes = tokens, edge weight = bigram
     count, 3 iterations, damping 0.85 — every transfer an integer DIV,
     so the fixed-point loop replays exactly in three unrolled CTEs.
     """
-    _utc(spark)
     from .operators.graph import pagerank_ppm
     from .operators.text import tokens_of
     from .qcommon import let
@@ -727,7 +692,6 @@ def q_fuzzy_blocked_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     8 edits — character-level near-dup detection, pair work bounded by
     the block sizes instead of the corpus square.
     """
-    _utc(spark)
     from .operators.linkage import blocked_edit_join
 
     docs = _fanout(
@@ -769,7 +733,6 @@ def q_robust_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only broadcast join — no per-key row-sort window anywhere;
     robust_scale stays as the test-pinned parity face.
     """
-    _utc(spark)
     from .operators.analytics import robust_scale_by_counts
 
     ev = _table(spark, sf_dir, "events").select(
@@ -812,21 +775,12 @@ ORDER BY event_type, event_id
 """
 
 
-QUERIES_R7["pagerank_tokens"] = q_pagerank_tokens
-ORACLE_R7["pagerank_tokens"] = SQL_PAGERANK_TOKENS
-QUERIES_R7["fuzzy_blocked_join"] = q_fuzzy_blocked_join
-ORACLE_R7["fuzzy_blocked_join"] = SQL_FUZZY_BLOCKED_JOIN
-QUERIES_R7["robust_scaling"] = q_robust_scaling
-ORACLE_R7["robust_scaling"] = SQL_ROBUST_SCALING
-
-
 def q_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson chi-square + Cramér's V between documents.lang and
     documents.source (operators/profiling.py::chi2_independence):
     integer identity (o·n − r·c)²/(n·r·c) per cell, decimal-summed;
     absent cells folded in via the closed form n − Σ_present r·c/n.
     """
-    _utc(spark)
     from .operators.profiling import chi2_independence
 
     docs = _table(spark, sf_dir, "documents").select("lang", "source")
@@ -879,7 +833,6 @@ def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative DISTINCT-VALUE histogram — integer bucket selection
     ((cum−1)·8 DIV n), the CBO stat next to zone_maps.
     """
-    _utc(spark)
     from .operators.profiling import equidepth_histogram
 
     li = _table(spark, sf_dir, "lineitem").select("l_extendedprice")
@@ -914,7 +867,6 @@ def q_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     result is bit-identical to the window form (which stays as the
     test-pinned parity face) with O(distinct values) per-key work.
     """
-    _utc(spark)
     from .operators.analytics import trimmed_mean_by_counts
 
     ev = _table(spark, sf_dir, "events").select("event_type", "value")
@@ -953,7 +905,6 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer quasi-identifiers (nationkey, mktsegment) at k=10, sliced
     per nation — the release-gate privacy census beside pii_redact.
     """
-    _utc(spark)
     from .operators.quality import k_anonymity_audit
 
     cust = _table(spark, sf_dir, "customer").select(
@@ -987,7 +938,6 @@ def q_boolean_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     containing 'hash' AND 'join' but NOT 'slow', with per-term tf —
     one pruned explode + one doc-keyed aggregate.
     """
-    _utc(spark)
     from .operators.indexing import boolean_search
 
     docs = _table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1036,7 +986,6 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     The audit a pipeline runs before trusting probabilistic dedup at
     100 TB: both sides are the documented scale plans, never all-pairs.
     """
-    _utc(spark)
     from .operators.fuzzy_dedup import (
         minhash_lsh_pairs,
         prefix_filter_join,
@@ -1176,20 +1125,6 @@ FROM joined
 """
 
 
-QUERIES_R7["chi2_independence"] = q_chi2_independence
-ORACLE_R7["chi2_independence"] = SQL_CHI2_INDEPENDENCE
-QUERIES_R7["equidepth_histogram"] = q_equidepth_histogram
-ORACLE_R7["equidepth_histogram"] = SQL_EQUIDEPTH_HISTOGRAM
-QUERIES_R7["trimmed_mean"] = q_trimmed_mean
-ORACLE_R7["trimmed_mean"] = SQL_TRIMMED_MEAN
-QUERIES_R7["k_anonymity"] = q_k_anonymity
-ORACLE_R7["k_anonymity"] = SQL_K_ANONYMITY
-QUERIES_R7["boolean_search"] = q_boolean_search
-ORACLE_R7["boolean_search"] = SQL_BOOLEAN_SEARCH
-QUERIES_R7["lsh_recall_audit"] = q_lsh_recall_audit
-ORACLE_R7["lsh_recall_audit"] = SQL_LSH_RECALL_AUDIT
-
-
 def q_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental view maintenance
     (operators/merge.py::incremental_join_agg): orders x lineitem
@@ -1198,7 +1133,6 @@ def q_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     each side. The oracle recomputes the view from scratch — a hash
     match IS the IVM correctness proof.
     """
-    _utc(spark)
     from .operators.merge import incremental_join_agg
     from .operators.sampling import hash_bucket
 
@@ -1257,7 +1191,6 @@ def q_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     set via the sort-filter algorithm — one domain-sized window, one
     join back, never the quadratic dominance self-join.
     """
-    _utc(spark)
     from .operators.analytics import pareto_frontier_2d
 
     orders = _table(spark, sf_dir, "orders").select(
@@ -1306,7 +1239,6 @@ def q_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     decommissioned-supplier window), so the orphan path is exercised:
     keys 90..99 surface as orphans with row counts and ppm.
     """
-    _utc(spark)
     from .operators.quality import fk_integrity_audit
 
     li = _table(spark, sf_dir, "lineitem").select("l_suppkey")
@@ -1351,7 +1283,6 @@ def q_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     differs per field: each field takes the LATEST non-null value,
     (ts, id)-total tie order, with per-field source timestamps.
     """
-    _utc(spark)
     from .operators.merge import golden_record
 
     ev = _table(spark, sf_dir, "events").select(
@@ -1403,16 +1334,6 @@ ORDER BY nv.user_id
 """
 
 
-QUERIES_R7["incremental_join_view"] = q_incremental_join_view
-ORACLE_R7["incremental_join_view"] = SQL_INCREMENTAL_JOIN_VIEW
-QUERIES_R7["pareto_frontier"] = q_pareto_frontier
-ORACLE_R7["pareto_frontier"] = SQL_PARETO_FRONTIER
-QUERIES_R7["fk_integrity"] = q_fk_integrity
-ORACLE_R7["fk_integrity"] = SQL_FK_INTEGRITY
-QUERIES_R7["golden_record"] = q_golden_record
-ORACLE_R7["golden_record"] = SQL_GOLDEN_RECORD
-
-
 def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-label purity — the clustering-quality eval next to
     kmeans_clusters: after the same two decimal-exact Lloyd iterations
@@ -1422,7 +1343,6 @@ def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     kmeans_clusters oracle replays (its a2 CTE) — the purity aggregate
     rides on top, labels joined from the same table.
     """
-    _utc(spark)
     from pyspark.sql import Window
     from .operators.clustering import _update_centroids, assign_clusters
     from .operators.similarity import finite_vectors
@@ -1546,17 +1466,12 @@ ORDER BY s.cluster_id
 )
 
 
-QUERIES_R7["cluster_purity"] = q_cluster_purity
-ORACLE_R7["cluster_purity"] = SQL_CLUSTER_PURITY
-
-
 def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch attribution
     (operators/analytics.py::last_touch_attribution): purchases
     credited to the user's most recent click/view within 7 days, 'none'
     otherwise — channel rollup with integer delay stats.
     """
-    _utc(spark)
     from .operators.analytics import last_touch_attribution
 
     ev = _table(spark, sf_dir, "events").select(
@@ -1599,10 +1514,6 @@ FROM conv GROUP BY 1 ORDER BY 1
 """
 
 
-QUERIES_R7["attribution"] = q_attribution
-ORACLE_R7["attribution"] = SQL_ATTRIBUTION
-
-
 _Z2_PREDS = [
     (1, 100, 149, 10, 19),   # narrow on both columns
     (2, 0, 1999, 10, 19),    # suppkey-only predicate
@@ -1621,7 +1532,6 @@ def q_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppkeys); z-order bounds BOTH columns per file, so suppkey-only
     predicates prune too. Stats frames are file-count-sized.
     """
-    _utc(spark)
     from .operators.layout import zorder_key
 
     li = _table(spark, sf_dir, "lineitem").select(
@@ -1802,10 +1712,6 @@ ORDER BY u.layout, u.pred_id
 """
 
 
-QUERIES_R7["zorder_skipping"] = q_zorder_skipping
-ORACLE_R7["zorder_skipping"] = zorder_skipping_sql()
-
-
 _KCENTER_K = 6
 
 
@@ -1818,7 +1724,6 @@ def q_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverage radius once that center is placed; k bounded driver
     actions, each a linear scan with chosen vectors as literals.
     """
-    _utc(spark)
     from .operators.clustering import kcenter_select
 
     emb = _fanout(_table(spark, sf_dir, "embeddings"))
@@ -1893,5 +1798,30 @@ WITH e AS (
     )
 
 
-QUERIES_R7["kcenter_select"] = q_kcenter_select
-ORACLE_R7["kcenter_select"] = kcenter_sql(_KCENTER_K)
+CATALOG = [
+    ("rate_limit", q_rate_limit, SQL_RATE_LIMIT),
+    ("inverted_index", q_inverted_index, SQL_INVERTED_INDEX),
+    ("zone_skipping", q_zone_skipping, SQL_ZONE_SKIPPING),
+    ("weighted_sample", q_weighted_sample, SQL_WEIGHTED_SAMPLE),
+    ("token_bucket", q_token_bucket, SQL_TOKEN_BUCKET),
+    ("cms_join_size", q_cms_join_size, SQL_CMS_JOIN_SIZE),
+    ("trend_fit", q_trend_fit, SQL_TREND_FIT),
+    ("bm25_topk", q_bm25_topk, SQL_BM25_TOPK),
+    ("pagerank_tokens", q_pagerank_tokens, SQL_PAGERANK_TOKENS),
+    ("fuzzy_blocked_join", q_fuzzy_blocked_join, SQL_FUZZY_BLOCKED_JOIN),
+    ("robust_scaling", q_robust_scaling, SQL_ROBUST_SCALING),
+    ("chi2_independence", q_chi2_independence, SQL_CHI2_INDEPENDENCE),
+    ("equidepth_histogram", q_equidepth_histogram, SQL_EQUIDEPTH_HISTOGRAM),
+    ("trimmed_mean", q_trimmed_mean, SQL_TRIMMED_MEAN),
+    ("k_anonymity", q_k_anonymity, SQL_K_ANONYMITY),
+    ("boolean_search", q_boolean_search, SQL_BOOLEAN_SEARCH),
+    ("lsh_recall_audit", q_lsh_recall_audit, SQL_LSH_RECALL_AUDIT),
+    ("incremental_join_view", q_incremental_join_view, SQL_INCREMENTAL_JOIN_VIEW),
+    ("pareto_frontier", q_pareto_frontier, SQL_PARETO_FRONTIER),
+    ("fk_integrity", q_fk_integrity, SQL_FK_INTEGRITY),
+    ("golden_record", q_golden_record, SQL_GOLDEN_RECORD),
+    ("cluster_purity", q_cluster_purity, SQL_CLUSTER_PURITY),
+    ("attribution", q_attribution, SQL_ATTRIBUTION),
+    ("zorder_skipping", q_zorder_skipping, zorder_skipping_sql()),
+    ("kcenter_select", q_kcenter_select, kcenter_sql(_KCENTER_K)),
+]

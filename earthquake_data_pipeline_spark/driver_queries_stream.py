@@ -281,14 +281,8 @@ FROM events
 """
 
 
-QUERIES_STREAM = {
-    "stream_window_counts": q_stream_window_counts,
-    "stream_running_totals": q_stream_running_totals,
-    "stream_dedup_days": q_stream_dedup_days,
-}
-
-ORACLE_STREAM = {
-    "stream_window_counts": SQL_STREAM_WINDOW_COUNTS,
-    "stream_running_totals": SQL_STREAM_RUNNING_TOTALS,
-    "stream_dedup_days": SQL_STREAM_DEDUP_DAYS,
-}
+CATALOG = [
+    ("stream_window_counts", q_stream_window_counts, SQL_STREAM_WINDOW_COUNTS),
+    ("stream_running_totals", q_stream_running_totals, SQL_STREAM_RUNNING_TOTALS),
+    ("stream_dedup_days", q_stream_dedup_days, SQL_STREAM_DEDUP_DAYS),
+]

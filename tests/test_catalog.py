@@ -6,7 +6,11 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
+import pytest
+
 import __spark_entry__ as entry
+
+TZ = "spark.sql.session.timeZone"
 
 
 def test_every_query_has_an_oracle():
@@ -19,31 +23,58 @@ def test_every_query_has_an_oracle():
 
 def test_schemas_are_explicitly_named(spark):
     # auto-generated column names (round(x, 6), count(1), …) would break
-    # the driver's name-sorted value hash; every column must be aliased
-    bad = {}
+    # the driver's name-sorted value hash; every column must be aliased.
+    # The driver's session has its own timezone: every entry must leave
+    # the session pinned to UTC (the registry's contract), starting from
+    # a non-UTC one.
+    bad, unpinned = {}, []
+    original = spark.conf.get(TZ)
     for name, fn in entry.queries().items():
-        cols = fn(spark, "/root/testdata/sf0.001").columns
+        spark.conf.set(TZ, "America/New_York")
+        try:
+            cols = fn(spark, "/root/testdata/sf0.001").columns
+            if spark.conf.get(TZ) != "UTC":
+                unpinned.append(name)
+        finally:
+            spark.conf.set(TZ, original)
         ugly = [c for c in cols if re.search(r"[(),]| ", c)]
         if ugly:
             bad[name] = ugly
     assert not bad, f"unaliased output columns: {bad}"
+    assert not unpinned, f"entries that leave the session timezone unpinned: {unpinned}"
+
+
+def test_registry_rejects_a_name_registered_twice():
+    from earthquake_data_pipeline_spark.catalog import register
+
+    def q(spark, sf_dir):
+        raise AssertionError("registration must not run the query")
+
+    queries, oracle = register([("a", q, "SELECT 1")], [("b", q, "SELECT 2")])
+    assert list(queries) == ["a", "b"] and oracle == {"a": "SELECT 1", "b": "SELECT 2"}
+    assert queries["a"].__wrapped__ is q
+    with pytest.raises(ValueError, match="'a' is registered twice"):
+        register([("a", q, "SELECT 1")], [("a", q, "SELECT 2")])
+    with pytest.raises(ValueError, match="'a' is registered twice"):
+        register([("a", q, "SELECT 1"), ("a", q, "SELECT 1")])
 
 
 def test_gate_head_invariants():
     """The driver proves exactly the first 50 queries(): the pinned
     rotation must be 50 unique names, every one registered with BOTH a
     query and an oracle, and the rotation must actually lead the
-    catalog's iteration order (a typo'd _GATE_FIRST name would silently
+    catalog's iteration order (a typo'd GATE_FIRST name would silently
     shrink the proven window)."""
-    from earthquake_data_pipeline_spark.driver_queries import _GATE_FIRST
+    from earthquake_data_pipeline_spark.gate import GATE_FIRST, GATE_WINDOW
 
     qs, oracles = entry.queries(), entry.oracle_sql()
-    assert len(_GATE_FIRST) == 50
-    assert len(set(_GATE_FIRST)) == 50
-    unknown = [n for n in _GATE_FIRST if n not in qs]
-    assert not unknown, f"_GATE_FIRST names not in queries(): {unknown}"
-    assert list(qs)[:50] == _GATE_FIRST
-    no_oracle = [n for n in _GATE_FIRST if n not in oracles]
+    assert GATE_WINDOW == 50
+    assert len(GATE_FIRST) == 50
+    assert len(set(GATE_FIRST)) == 50
+    unknown = [n for n in GATE_FIRST if n not in qs]
+    assert not unknown, f"GATE_FIRST names not in queries(): {unknown}"
+    assert list(qs)[:50] == GATE_FIRST
+    no_oracle = [n for n in GATE_FIRST if n not in oracles]
     assert not no_oracle, f"head entries without oracle: {no_oracle}"
 
 

@@ -48,10 +48,7 @@ def main() -> int:
         f.write(src)
 
     from earthquake_data_pipeline_spark import qcommon
-    from earthquake_data_pipeline_spark.driver_queries import (
-        LSH_BANDS,
-        MINHASH_SEEDS,
-    )
+    from earthquake_data_pipeline_spark.qcommon import LSH_BANDS, MINHASH_SEEDS
     from earthquake_data_pipeline_spark.operators import _fuzzy_dedup_r10_tmp as old
     from earthquake_data_pipeline_spark.operators import fuzzy_dedup as new
     from earthquake_data_pipeline_spark.operators.dedup import (

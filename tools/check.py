@@ -32,7 +32,7 @@ sys.path.insert(0, REPO)
 import duckdb
 import pandas as pd
 
-GATE_WINDOW = 50  # the driver verifies exactly the first 50 queries()
+from earthquake_data_pipeline_spark.gate import GATE_WINDOW
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
