@@ -22,52 +22,40 @@ GATE_WINDOW = 50
 #      embeddings — even if no query changed;
 #   4. remaining slots go to the queries with the OLDEST banked row.
 #
-# ROUND-18 HEAD (optimization round 2): proof debt enters at 0/148;
-# last-green histogram entering: r14×8, r15×45, r16×45, r17×50. Per
-# the committed r18 sketch (SURVEY) and the rotation policy:
-# (1) round-18 churn — every query whose code or CALLED OPERATOR
-#     changed this round: the fuzzy_dedup shared-shingle params
-#     (tokens_df/tokens_col — seats every minhash_lsh_pairs /
-#     prefix_filter_join consumer), the _cum_value_counts one-window
-#     rewrite + percentile_moments_by_counts fusion (seats every
-#     by-counts consumer), the nine measured fanout removals, the
-#     bloom_prune fanout addition, the embeddings-family fanout
-#     removals — PLUS the two driver-side regression adjudication
-#     seats VERDICT r17 item 1 requires (dedup_keep_list,
-#     cluster_purity; quiet A/Bs in OPTIMIZATION_r18.md).
-# (2) the r14 bank remainder (7 rows after tfidf_top_terms seats as
-#     churn — retiring the r14 generation): token_bucket,
-#     top2_per_user, top_k_orders, trend_fit, url_domains,
-#     usgs_pipeline, value_histogram.
-# (3) the r15 bank alphabetically until the window fills (17 rows,
-#     array_suite..enrich_coalesce; the rest of the r15 bank rolls
-#     to r19). qcommon.py, functions/scalar.py, tools/check.py are
-#     untouched this round so rule-3 sentinels are not forced; events
-#     (json_extract, usgs_pipeline), lineitem (percentile_stats,
-#     trimmed_mean), documents (boilerplate_strip, prefix_filter_join),
-#     embeddings (cluster_purity) are covered regardless.
+# ROUND-19 HEAD: proof debt enters at 0/148; last-green histogram
+# entering: r15×19, r16×33, r17×46, r18×50. Rule 1 seats nothing (no
+# query lacks a driver row). Rule 2 seats nothing: this round moved the
+# catalog into one registry (catalog.py) and the gate into this module,
+# and the unchanged QUERIES/ORACLE hashes and `tools/explain.py
+# --summary` plans show that no query changed. Rule 3 applies
+# (tools/check.py changed) and the head already covers it: events
+# (enrich_events, spatial_join), lineitem (pricing_summary), documents
+# (lang_id), embeddings (cosine_topk).
+# (1) the carried seats: plans changed in 0ab62c4, not yet re-verified
+#     by the driver;
+# (2) rule 4: the rest of the r15 bank, then the r16 bank alphabetically
+#     until the window fills (cosine_topk..weighted_sample);
+#     zone_skipping, zorder_skipping and zscore_outliers roll to r20.
 GATE_FIRST = [
-    # (1) round-18 churn (26 — the last five are the embeddings-family
-    # fanout removals landed after the first rotation cut):
-    "lsh_recall_audit", "prefix_filter_join", "minhash_lsh",
-    "dedup_components", "lsh_jaccard_refine", "dedup_keep_list",
-    "percentile_stats", "quality_deciles", "robust_scaling",
-    "trimmed_mean", "mad_outliers", "json_extract", "boilerplate_strip",
-    "pmi_collocations", "bigram_lm_score", "tfidf_top_terms",
-    "url_canonical", "regex_token_match", "doc_repetition",
-    "bloom_prune", "cluster_purity",
-    "kmeans_clusters", "label_centroids", "ann_lsh", "ann_ivf",
-    "embedding_near_dup_lsh",
-    # (2) the r14 bank, retired in full (7 rows):
-    "token_bucket", "top2_per_user", "top_k_orders", "trend_fit",
-    "url_domains", "usgs_pipeline", "value_histogram",
-    # (3) the r15 bank alphabetically through enrich_coalesce (17 rows;
-    # enrich_events..expectations_report roll to r19 with the rest):
-    "array_suite", "bm25_topk", "boolean_search", "char_diversity",
-    "chunk_documents", "clean_events", "cms_frequency", "column_profile",
-    "compaction_plan", "conditional_ratio", "corr_stats",
-    "correlated_subquery", "cube_agg", "datetime_suite", "distinct_agg",
-    "domain_mixture", "enrich_coalesce",
+    # (1) carried seats (3):
+    "equidepth_histogram", "approx_quality_bins", "top_p_select",
+    # (2) the r15 bank, retired in full (18 more rows):
+    "enrich_events", "eval_overlap", "exact_substring_dup",
+    "expectations_report", "fact_fact_join", "fact_reconciliation",
+    "fuzzy_blocked_join", "heavy_hitters", "high_water_mark",
+    "incremental_join_view", "lang_id", "length_batching",
+    "ngram_containment", "ngram_jaccard", "pack_sequences",
+    "spatial_join", "token_stats", "winnow_fingerprint",
+    # the r16 bank alphabetically through weighted_sample (29 rows):
+    "cosine_topk", "embedding_near_dup", "exact_dedup",
+    "histogram_drift", "in_list_case_sort", "incremental_agg",
+    "inverted_index", "join_explosion", "k_anonymity", "max_per_group",
+    "merge_anti_join", "mp4_probe", "pagerank_tokens",
+    "pareto_frontier", "pii_redact", "pivot_status", "pricing_summary",
+    "range_join", "ranking_suite", "region_rollup", "rollup_agg",
+    "severity_buckets", "simhash", "snapshot_diff", "split_assignment",
+    "stats_per_decade", "union_dedup", "upsert_merge",
+    "weighted_sample",
 ]
 
 assert len(GATE_FIRST) == GATE_WINDOW, len(GATE_FIRST)
